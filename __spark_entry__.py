@@ -5824,6 +5824,11 @@ _DRIVER_WINDOW = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     reg = _registry()
+    missing = [n for n in _DRIVER_WINDOW if n not in reg]
+    if missing:
+        raise ValueError(
+            f"_DRIVER_WINDOW names not in the registry: {', '.join(missing)}"
+        )
     front = {n: reg[n] for n in _DRIVER_WINDOW}
     rest = {n: f for n, f in reg.items() if n not in front}
     return {**front, **rest}

@@ -4,7 +4,7 @@ A brand-new distributed re-expression of the capabilities of the reference
 crawler (redd4ford/spider, read-only at /root/reference): fetching is a join
 against a Common-Crawl-style pages table, link extraction is a vectorized
 Arrow/pandas UDF, dedup is a bloom-prefiltered anti-join against a seen table,
-politeness is a per-host ``applyInPandas`` scheduler, and crawl rounds are
+politeness is a per-host ``row_number`` window scheduler, and crawl rounds are
 iterative DataFrame jobs with atomic per-round snapshot commits.
 
 Nothing here is a port: the reference is single-process asyncio; this engine

@@ -4,23 +4,25 @@ The reference's "politeness" is an ``asyncio.Semaphore(concurrency_limit)``
 acquired once around the entire crawl — a no-op in practice (quirk Q4,
 crawler.py:82-83; default limit 5, cli.py:67-74, config.ini.example:9).
 The north rule requires the real thing: a per-host budget per round with a
-priority queue, expressed as ``groupBy(host).applyInPandas``.
+priority queue, expressed as a ``row_number()`` window per host — pure JVM,
+no Python worker in the scheduler.
 
 Scale design (hard item H4 — one hot host can hold ~50% of the frontier):
-a single ``groupBy(host)`` would funnel the hot host into one task. The
-scheduler therefore selects top-k-per-host in **two stages**:
+a single window partitioned by host would funnel the hot host into one
+task. The scheduler therefore selects top-k-per-host in **two stages**:
 
-1. **salted stage** — group by ``(host, xxhash64(url) % salt)`` and keep at
-   most ``k`` rows per salted group (each group's local top-k by the
-   priority key). This bounds any group to ``k`` rows and spreads the
-   hot host over ``salt`` tasks.
-2. **exact stage** — group the ≤ ``salt × k`` survivors per host and
+1. **salted stage** — partition by ``(host, pmod(xxhash64(url), salt))``
+   and keep at most ``k`` rows per salted partition (each one's local
+   top-k by the priority key). This bounds any partition to ``k`` rows
+   and spreads the hot host over ``salt`` tasks.
+2. **exact stage** — partition the ≤ ``salt × k`` survivors by host and
    keep the true top-``k``.
 
-Both stages sort by the BFS priority key ``(depth, admission_rank)`` (the
-north rule's crawl-depth/priority score), so the result is exactly the
-rows a single per-host priority queue would emit. URLs beyond the budget
-are *carryover*: they stay in the frontier for the next round.
+Both stages order by the BFS priority key ``(depth, admission_rank)`` (the
+north rule's crawl-depth/priority score), ties broken by ``canon_url``, so
+the result is exactly the rows a single per-host priority queue would emit.
+URLs beyond the budget are *carryover*: they stay in the frontier for the
+next round.
 
 **Seen-set invariance.** The budget changes scheduling, never membership —
 *provided* min-depth discovery order is preserved. That is a theorem only
@@ -68,8 +70,7 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 PRIORITY_COLS = ["depth", "admission_rank"]
@@ -223,29 +224,6 @@ def apply_robots(frontier: DataFrame, rules: RobotsRules,
     return allowed, denied
 
 
-def _topk_fn(k: int | None):
-    """applyInPandas kernel: per-group priority queue emitting the top
-    ``min(k, group's __delay_cap, group's __host_budget)`` rows by
-    (depth, admission_rank). ``k=None`` means no global per-host budget —
-    the group's own caps (delay, host-budget column) still apply; with no
-    cap at all the group passes through whole."""
-
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        kk = k
-        cap = pdf["__delay_cap"].iat[0]
-        if pd.notna(cap):
-            kk = int(cap) if kk is None else min(kk, int(cap))
-        if "__host_budget" in pdf.columns:
-            hb = pdf["__host_budget"].iat[0]
-            if pd.notna(hb):
-                kk = int(hb) if kk is None else min(kk, int(hb))
-        if kk is None:
-            return pdf
-        return pdf.nsmallest(kk, PRIORITY_COLS)
-
-    return topk
-
-
 def schedule(
     frontier: DataFrame,
     budget: int | None,
@@ -265,12 +243,16 @@ def schedule(
     into the round (budget and delay caps scale by ``waves``); under
     ``strict_bfs`` only the frontier's minimum-depth level competes for
     budget, which preserves min-depth discovery (see module docstring).
+    Each group keeps its first ``min(budget × waves, delay cap, host
+    budget)`` rows (a NULL cap is no cap) in ``(depth, admission_rank,
+    canon_url)`` order: rows tied on the priority key are taken by
+    ascending ``canon_url``, so the eligible set is deterministic.
 
     ``host_budgets`` is an optional ``(host, budget)`` table of PER-HOST
     round budgets (e.g. derived from TrustRank/OPIC buckets, crawl
     contracts, or abuse history) that composes with the scalar ``budget``
     and the robots delay caps by minimum. It rides the same broadcast-join
-    + per-group-kernel path as the delay caps — host-level, tiny next to
+    + per-group window path as the delay caps — host-level, tiny next to
     the frontier, never collected. Budgets clamp to ≥1 (a 0-budget host
     would never drain its carryover and the crawl loop could not
     terminate; exclusion is robots'/the blocklist's job, not the rate
@@ -294,15 +276,12 @@ def schedule(
     rules = rules or RobotsRules()
     if rules.trivially_empty:
         allowed, blocked_df = frontier, frontier.limit(0)
-        if budget is None and host_budgets is None:
-            return allowed, allowed.limit(0), blocked_df
-        allowed = allowed.withColumn("__delay_cap", F.lit(None).cast("int"))
     else:
         allowed, blocked_df = apply_robots(frontier, rules, round_window_sec)
-        if budget is None and host_budgets is None:
-            # no budget: delay caps don't apply either (reference parity
-            # path keeps robots exclusion but no rate maths)
-            return allowed.drop("__delay_cap"), frontier.limit(0), blocked_df
+    if budget is None and host_budgets is None:
+        # no budget: delay caps don't apply either (reference parity
+        # path keeps robots exclusion but no rate maths)
+        return allowed.drop("__delay_cap"), frontier.limit(0), blocked_df
 
     if strict_bfs:
         # gate to the minimum-depth level: a 1-row aggregate joined back
@@ -315,42 +294,40 @@ def schedule(
     else:
         gated = allowed
 
-    k = budget * max(1, waves) if budget is not None else None
-    if waves > 1:
+    # per-group cap: least() skips NULLs, so a NULL cap means uncapped
+    waves = max(1, waves)
+    caps = [] if budget is None else [F.lit(budget * waves)]
+    if "__delay_cap" in gated.columns:
         # a batched round spans `waves` politeness windows → delay caps
         # scale identically to the budget
-        gated = gated.withColumn(
-            "__delay_cap", (F.col("__delay_cap") * waves).cast("int")
-        )
-    if group_col != "host" and "__delay_cap" in gated.columns:
-        # host-scoped robots caps folded to the group's strictest member
-        # (min ignores NULL = uncapped hosts); the window shuffle aligns
-        # with the groupBy that follows
-        from pyspark.sql import Window as _W
-
-        gated = gated.withColumn(
-            "__delay_cap",
-            F.min("__delay_cap").over(_W.partitionBy(group_col)),
-        )
+        delay_cap = F.col("__delay_cap") * waves
+        if group_col != "host":
+            # host-scoped robots caps folded to the group's strictest
+            # member (min ignores NULL = uncapped hosts)
+            delay_cap = F.min(delay_cap).over(Window.partitionBy(group_col))
+        caps.append(delay_cap)
     if host_budgets is not None:
         hb = host_budgets.select(
             F.lower(F.col(group_col)).alias(group_col),
             (F.greatest(F.col("budget").cast("int"), F.lit(1))
-             * max(1, waves)).alias("__host_budget"),
+             * waves).alias("__host_budget"),
         )
         gated = gated.join(F.broadcast(hb), on=group_col, how="left")
-    schema = gated.schema
+        caps.append(F.col("__host_budget"))
+    kk = caps[0] if len(caps) == 1 else F.least(*caps)
 
-    stage1 = (
-        gated.withColumn("__salt", F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt)))
-        .groupBy(group_col, "__salt")
-        .applyInPandas(
-            lambda pdf: _topk_fn(k)(pdf.drop(columns="__salt")),
-            schema=schema,
+    order = [F.col(c).asc() for c in PRIORITY_COLS] + [F.col("canon_url").asc()]
+    shard = F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt))
+    keep = F.col("__kk").isNull() | (F.col("__r") <= F.col("__kk"))
+    eligible = gated.withColumn("__kk", kk)
+    for part in ([group_col, shard], [group_col]):  # salted, then exact
+        w = Window.partitionBy(*part).orderBy(*order)
+        eligible = (
+            eligible.withColumn("__r", F.row_number().over(w))
+            .filter(keep)
+            .drop("__r")
         )
-    )
-    eligible = stage1.groupBy(group_col).applyInPandas(_topk_fn(k), schema=schema)
-    eligible = eligible.drop("__delay_cap", "__host_budget")
+    eligible = eligible.drop("__kk", "__delay_cap", "__host_budget")
     carryover = allowed.drop("__delay_cap").join(
         eligible.select("canon_url"), on="canon_url", how="left_anti"
     )
@@ -393,8 +370,6 @@ def global_round_cap(eligible: DataFrame, cap: int,
     ties break on ``canon_url``."""
     if cap < 1:
         raise ValueError(f"cap must be ≥1: {cap}")
-    from pyspark.sql import Window
-
     pool = eligible
     if strict_bfs:
         lvl = eligible.agg(F.min("depth").alias("__lvl"))

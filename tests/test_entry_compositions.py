@@ -212,3 +212,18 @@ class TestImportanceTieredSchedule:
         tiers = [k[0] for k in keys]
         assert tiers == sorted(tiers)
         assert set(range(tiers[0], tiers[-1] + 1)) >= set(tiers)
+
+
+class TestDriverWindow:
+    """Spark-free: ``queries()`` only builds the registry dict."""
+
+    def test_missing_window_names_all_reported(self, monkeypatch):
+        monkeypatch.setattr(
+            entry, "_DRIVER_WINDOW",
+            ["crawl_results", "no_such_query", "also_missing"],
+        )
+        with pytest.raises(ValueError) as ei:
+            entry.queries()
+        msg = str(ei.value)
+        assert "no_such_query" in msg and "also_missing" in msg
+        assert "crawl_results" not in msg

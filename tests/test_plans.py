@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from spider_spark.functions.text import quality_score, token_count
 from spider_spark.operators.dedupe import minhash_signatures, simhash
+from spider_spark.operators.politeness import RobotsRules, schedule
 from spider_spark.operators.similarity import cosine_topk
 from spider_spark.sources.pages import synthetic_pages
 
@@ -81,6 +82,38 @@ class TestJVMOnlyOperators:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         plan = plan_of(cosine_topk(emb, emb.filter(F.col("vec_id") < 2), k=3))
         assert "EvalPython" not in plan and "InPandas" not in plan
+
+    @pytest.mark.parametrize(
+        "variant", ["budget", "crawl_delay", "host_budgets", "site", "waves"]
+    )
+    def test_schedule_no_python_eval(self, spark, variant):
+        """The per-host top-k is a row_number window, not a pandas kernel:
+        neither scheduler output may cross into a Python worker."""
+        frontier = spark.createDataFrame(
+            [(f"https://h{i % 3}.example/p/{i}", f"h{i % 3}.example",
+              f"s{i % 2}", 1, i) for i in range(12)],
+            "canon_url string, host string, site string, depth int, "
+            "admission_rank long",
+        )
+        hb = spark.createDataFrame(
+            [("h0.example", 2)], "host string, budget int"
+        )
+        kwargs = {
+            "budget": dict(budget=2),
+            "crawl_delay": dict(
+                budget=2, rules=RobotsRules(crawl_delay={"h1.example": 30.0})
+            ),
+            "host_budgets": dict(budget=None, host_budgets=hb),
+            "site": dict(
+                budget=2, group_col="site",
+                rules=RobotsRules(crawl_delay={"h1.example": 30.0}),
+            ),
+            "waves": dict(budget=2, waves=3),
+        }[variant]
+        eligible, carryover, _ = schedule(frontier, **kwargs)
+        for out in (eligible, carryover):
+            plan = plan_of(out)
+            assert "EvalPython" not in plan and "InPandas" not in plan
 
 
 class TestDurableSeenJoin:

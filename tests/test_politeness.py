@@ -435,3 +435,86 @@ class TestHostBudgetTable:
         got = {(r["canon_url"], r["depth"]) for r in budgeted.seen.collect()}
         assert got == expected
         assert len(budgeted.metrics) > len(base.metrics)  # budget bound
+
+
+# ---- exactness against a plain per-group reference -------------------------
+# One hot host (h0) holds 60% of the rows; admission ranks take only four
+# values, so the canon_url tie-break decides every cut, and input order is
+# the reverse of canon_url order. Delay caps: h0 → 3/window, h1 → NULL
+# (delay 0), h2 → 2/window, h3/h4 → NULL (no robots row). The budget table
+# leaves h3 out, so with budget=None h3 is uncapped and passes through whole.
+_EX_HOSTS = ["h0.example"] * 60 + [f"h{1 + j % 4}.example" for j in range(40)]
+_EX_DELAY = {"h0.example": 20.0, "h1.example": 0.0, "h2.example": 30.0}
+_EX_HB = {"h0.example": 5, "h1.example": 2, "h2.example": 4, "h4.example": 1}
+_EX_WAVES = 3
+
+
+def _ex_rows():
+    return [
+        (f"https://{h}/p/{199 - i:03d}", h, 1 + (i // 3) % 2, i % 4)
+        for i, h in enumerate(_EX_HOSTS)
+    ]
+
+
+def _reference_schedule(rows, budget, strict):
+    """Per host: sort by (depth, admission_rank, canon_url) and slice to
+    the least of the scaled scalar, delay and table caps (None = no cap)."""
+    level = min(r[2] for r in rows)
+    pool = [r for r in rows if not strict or r[2] == level]
+    groups = {}
+    for r in pool:
+        groups.setdefault(r[1], []).append(r)
+    chosen = set()
+    for host, rs in groups.items():
+        caps = [] if budget is None else [budget * _EX_WAVES]
+        if _EX_DELAY.get(host, 0.0) > 0:
+            caps.append(max(int(60.0 // _EX_DELAY[host]), 1) * _EX_WAVES)
+        if host in _EX_HB:
+            caps.append(_EX_HB[host] * _EX_WAVES)
+        rs.sort(key=lambda r: (r[2], r[3], r[0]))
+        chosen |= {r[0] for r in rs[: min(caps) if caps else None]}
+    return chosen
+
+
+class TestScheduleExactness:
+    @pytest.fixture(scope="class")
+    def skewed(self, spark):
+        return spark.createDataFrame(
+            _ex_rows(),
+            "canon_url string, host string, depth int, admission_rank long",
+        ).cache()
+
+    @pytest.fixture(scope="class")
+    def caps(self, spark):
+        rules = RobotsRules(crawl_delay=_EX_DELAY)
+        hb = spark.createDataFrame(
+            list(_EX_HB.items()), "host string, budget int"
+        ).cache()
+        return rules, hb
+
+    @pytest.mark.parametrize("strict", [True, False])
+    @pytest.mark.parametrize("budget", [None, 2])
+    def test_matches_per_group_reference(self, skewed, caps, budget, strict):
+        rules, hb = caps
+        eligible, carryover, blocked = schedule(
+            skewed, budget, rules, salt=4, strict_bfs=strict,
+            waves=_EX_WAVES, host_budgets=hb,
+        )
+        got = {r["canon_url"] for r in eligible.collect()}
+        assert got == _reference_schedule(_ex_rows(), budget, strict)
+        assert sorted(eligible.columns) == sorted(skewed.columns)
+        carry = {r["canon_url"] for r in carryover.collect()}
+        assert carry == {r[0] for r in _ex_rows()} - got
+        assert blocked.count() == 0
+
+    def test_ties_break_on_canon_url(self, spark):
+        """Rows tied on (depth, admission_rank) are taken in ascending
+        canon_url order, whatever order they arrive in."""
+        rows = [(f"https://t.example/{c}", "t.example", 1, 0) for c in "dbeca"]
+        tied = spark.createDataFrame(
+            rows, "canon_url string, host string, depth int, admission_rank long"
+        ).repartition(3)
+        eligible, _, _ = schedule(tied, budget=2, salt=2)
+        assert sorted(r["canon_url"] for r in eligible.collect()) == [
+            "https://t.example/a", "https://t.example/b"
+        ]

@@ -8,19 +8,25 @@ name, rows sorted, floats kept as repr). Usage:
     python tools/check_contract.py [sf_dir] [query ...]
 
 Writes a provenance-stamped JSON mirror of the run (git SHA, sf,
-wall-clock, per-query status) to ``/tmp/contract_replay.json`` so a
-red driver row can be matched to the exact code state it ran against.
+wall-clock, per-query status) to a per-run file in the system temp
+directory, ``contract_replay_<UTC timestamp>_<pid>.json`` (the path is
+printed at the end), so a red driver row can be matched to the exact code
+state it ran against and concurrent runs never overwrite each other.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import os
+import pathlib
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import duckdb  # noqa: E402
 
@@ -138,21 +144,26 @@ def main():
     print(f"\n{n_pass} passed, {n_fail} failed")
     try:
         sha = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+            ["git", "-C", str(REPO), "rev-parse", "HEAD"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip() or "unknown"
     except Exception:
         sha = "unknown"
-    with open("/tmp/contract_replay.json", "w") as f:
+    stamp = time.gmtime()
+    out = pathlib.Path(tempfile.gettempdir()) / (
+        f"contract_replay_{time.strftime('%Y%m%dT%H%M%SZ', stamp)}"
+        f"_{os.getpid()}.json"
+    )
+    with open(out, "w") as f:
         json.dump({
             "git_sha": sha,
             "sf_dir": sf_dir,
-            "wall_clock_utc": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", stamp),
             "n_pass": n_pass,
             "n_fail": n_fail,
             "queries": report,
         }, f, indent=1)
+    print(f"replay report: {out}")
     return 1 if n_fail else 0
 
 

@@ -4,10 +4,12 @@ operators. The properties shown are pinned as tests in tests/test_plans.py."""
 from __future__ import annotations
 
 import io
+import pathlib
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -100,7 +102,7 @@ def main() -> None:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
         spark.sql("DROP TABLE IF EXISTS plans_seen_bucketed")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(
             "# PLANS — formatted physical plans for the scale-critical operators\n\n"
         )

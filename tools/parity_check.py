@@ -7,9 +7,10 @@ Usage: python tools/parity_check.py local[2]
 from __future__ import annotations
 
 import hashlib
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from spider_spark.plans.crawl import CrawlConfig, CrawlEngine  # noqa: E402
 from spider_spark.session import get_spark  # noqa: E402
