@@ -13,34 +13,38 @@ Than Bloom", CoNEXT'14) stores displaceable 16-bit fingerprints in
   caveat below);
 * comparable space at fpp ≈ ``2·4 / 2^16 ≈ 1.2e-4`` with ~95% load.
 
-Same two-stage exactness contract as the bloom path: the filter only
+:class:`ShardedCuckoo` is the cuckoo kernel of the sharded seen-filter
+contract (:mod:`.shardstore`), shared with the bloom: same shard layout,
+same probe UDF and candidate split (:func:`filter_unseen`, bound here as
+``filter_unseen_cuckoo``), same growth rule and release. The filter only
 *prefilters*; every maybe-seen candidate is confirmed by an exact
-anti-join, so false positives never drop a URL. Deletion's standard
-caveat: deleting key A also unblocks a key B that collides with A on
-(bucket, fingerprint) — probability ≈ fpp per key — which here only
+anti-join, so false positives never drop a URL. Deletion
+(:func:`delete_from`) is the one capability only the cuckoo adds. Its
+standard caveat: deleting key A also unblocks a key B that collides with
+A on (bucket, fingerprint) — probability ≈ fpp per key — which here only
 means B gets re-fetched once; it can never corrupt the exact seen table.
 
-**Sharding & distribution.** Shard by ``xxhash64(key, SHARD_SALT) %
-n_shards`` exactly like :class:`.bloom.ShardedBloom`, one broadcast per
-shard at probe time. Unlike bloom bit arrays, cuckoo tables are NOT
-OR-mergeable, so the build repartitions keys BY SHARD and builds each
-shard's whole table inside the task that owns it (``mapInPandas``; a
-task may own several shards, a shard never spans tasks). Driver traffic
-is one table per shard — same order as the bloom partials. Inserts are
-bulk-vectorized: a numpy pass places all items with a free primary slot,
-a second pass tries alternate buckets, and only the residue (both
-buckets full) walks the classic kick chain.
+**Distribution.** Unlike bloom bit arrays, cuckoo tables are NOT
+OR-mergeable — a crawl round's admissions cannot ride the ranking pass
+and cost one keyed add job. Adds and deletes repartition keys BY SHARD
+and rewrite each shard's whole table inside the task that owns it
+(``mapInPandas``; a task may own several shards, a shard never spans
+tasks). Driver traffic is one table per shard — same order as the bloom
+partials. Inserts are bulk-vectorized: a numpy pass places all items with
+a free primary slot, a second pass tries alternate buckets, and only the
+residue (both buckets full) walks the classic kick chain.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
-from spider_spark.operators.bloom import _SHARD_SALT
+from spider_spark.operators.shardstore import ShardedFilter, filter_unseen
 
 _FP_SALT = 0x2545F491
 _SLOTS = 4
@@ -48,14 +52,15 @@ _MAX_KICKS = 500
 
 
 class CuckooTable:
-    """One shard: ``(n_buckets, 4)`` uint16 fingerprint slots (0 = empty)."""
+    """One shard: ``(n_buckets, 4)`` uint16 fingerprint slots (0 = empty).
+    ``slots`` may come flat (a shard file or broadcast's bytes)."""
 
     def __init__(self, n_buckets: int, slots: np.ndarray | None = None):
         if n_buckets & (n_buckets - 1):
             raise ValueError(f"n_buckets must be a power of two: {n_buckets}")
         self.n_buckets = n_buckets
         self.slots = (
-            slots
+            slots.reshape(n_buckets, _SLOTS)
             if slots is not None
             else np.zeros((n_buckets, _SLOTS), dtype=np.uint16)
         )
@@ -171,82 +176,32 @@ class CuckooTable:
                     break
         return removed
 
-
-class ShardedCuckoo:
-    """``n_shards`` independent cuckoo tables partitioning the key space by
-    the same shard hash the bloom uses. ``n_items`` is the exact running
-    count (caller-maintained, adds minus deletes); ``saturated`` signals
-    the rebuild-bigger point at the 95% design load."""
-
-    def __init__(self, expected: int, n_shards: int = 1,
-                 spill_dir: str | None = None,
-                 max_driver_bytes: int | None = None):
-        from spider_spark.operators.bloom import MAX_DRIVER_FILTER_BYTES
-
-        self.n_shards = max(1, n_shards)
-        self.expected = max(1, expected)
-        self.n_buckets = CuckooTable.sized_for(
-            max(1, self.expected // self.n_shards)
-        )
-        self.spill_dir = spill_dir
-        shard_bytes = self.n_buckets * _SLOTS * 2
-        bound = (MAX_DRIVER_FILTER_BYTES
-                 if max_driver_bytes is None else max_driver_bytes)
-        if spill_dir is None:
-            total = self.n_shards * shard_bytes
-            if total > bound:
-                raise ValueError(
-                    f"in-memory ShardedCuckoo would hold {total / 2**30:.1f} "
-                    f"GiB on the driver ({self.n_shards} shards × "
-                    f"{shard_bytes} B for {self.expected:,} keys), over the "
-                    f"{bound / 2**30:.1f} GiB bound — pass spill_dir= "
-                    "(shared-filesystem shard store: driver holds only "
-                    "paths, executors build/mutate/probe shards directly) "
-                    "or raise max_driver_bytes explicitly"
-                )
-            self.shards = [CuckooTable(self.n_buckets)
-                           for _ in range(self.n_shards)]
-        else:
-            from spider_spark.operators.shardstore import ShardStore
-
-            self.store = ShardStore(spill_dir, dtype="uint16")
-            # None = shard never written (empty table: definite miss)
-            self.shard_paths: list[str | None] = [None] * self.n_shards
-            self.version = 0
-        self.n_items = 0
-        self._live_bcasts: list = []
-
-    @property
-    def spilled(self) -> bool:
-        return self.spill_dir is not None
-
-    def gc_spill(self) -> int:
-        """Drop superseded shard files (call once the jobs that probed the
-        previous version have run — the broadcast-destroy point)."""
-        return self.store.gc(self.shard_paths) if self.spilled else 0
-
-    @property
-    def saturated(self) -> bool:
-        return self.n_items > self.expected
-
-    def register_broadcasts(self, handles: list) -> None:
-        self._live_bcasts.extend(handles)
-
-    def destroy_broadcasts(self) -> int:
-        n = len(self._live_bcasts)
-        for b in self._live_bcasts:
-            try:
-                b.destroy()
-            except Exception:
-                pass
-        self._live_bcasts.clear()
-        return n
+    def tobytes(self) -> bytes:
+        return self.slots.tobytes()
 
 
-def _key_cols(col: str, n_shards: int):
-    h = F.xxhash64(F.col(col)).cast("long")
-    sh = F.pmod(F.xxhash64(F.col(col), F.lit(_SHARD_SALT)), F.lit(n_shards)).cast("int")
-    return h.alias("__h"), sh.alias("__shard")
+class ShardedCuckoo(ShardedFilter):
+    """``n_shards`` independent cuckoo tables (see :class:`.shardstore.
+    ShardedFilter` for the shared layout and lifecycle). ``n_items`` counts
+    adds minus deletes; ``expected`` is the 95% design load."""
+
+    dtype = "uint16"
+
+    def _size(self, per_shard: int) -> int:
+        self.n_buckets = CuckooTable.sized_for(per_shard)
+        return self.n_buckets * _SLOTS * 2
+
+    def _kernel(self):
+        return partial(CuckooTable, self.n_buckets)
+
+    def _key_cols(self, col: str):
+        return F.xxhash64(F.col(col)).cast("long").alias("__h"), self._shard_col(col)
+
+    def resized(self, expected: int) -> "ShardedCuckoo":
+        return ShardedCuckoo(expected, self.n_shards, spill_dir=self.spill_dir)
+
+    def add(self, df: DataFrame, col: str) -> int:
+        return _apply_sharded(self, df, col, "add")
 
 
 def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
@@ -257,8 +212,8 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
     (in-memory mode, shipped in via broadcast for adds into a non-empty
     filter) or to the shard store (spill mode: the task reads the shard's
     current file, mutates, writes the next version; the driver sees only
-    paths)."""
-    n_buckets, n_shards = cuckoo.n_buckets, cuckoo.n_shards
+    paths). Returns the number of keys applied."""
+    kernel = cuckoo._kernel()
     sc = df.sparkSession.sparkContext
     spilled = cuckoo.spilled
     if spilled:
@@ -270,11 +225,11 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
         empty = not any(t.slots.any() for t in cuckoo.shards)
         tables_bc = (
             None if empty
-            else sc.broadcast([t.slots.tobytes() for t in cuckoo.shards])
+            else sc.broadcast([t.tobytes() for t in cuckoo.shards])
         )
     hashed = (
-        df.select(*_key_cols(col, n_shards))
-        .repartition(n_shards, F.col("__shard"))
+        df.select(*cuckoo._key_cols(col))
+        .repartition(cuckoo.n_shards, F.col("__shard"))
     )
 
     def run(batches):
@@ -292,21 +247,12 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
                 if t is None:
                     if spilled:
                         p = base_paths[int(s)]
-                        base = (
-                            np.zeros((n_buckets, _SLOTS), dtype=np.uint16)
-                            if p is None
-                            else store.read(p, use_cache=False)
-                            .reshape(n_buckets, _SLOTS)
-                        )
+                        base = None if p is None else store.read(p, use_cache=False)
                     else:
-                        base = (
-                            np.zeros((n_buckets, _SLOTS), dtype=np.uint16)
-                            if tables_bc is None
-                            else np.frombuffer(
-                                tables_bc.value[int(s)], dtype=np.uint16
-                            ).reshape(n_buckets, _SLOTS).copy()
-                        )
-                    t = local[int(s)] = CuckooTable(n_buckets, base)
+                        base = None if tables_bc is None else np.frombuffer(
+                            tables_bc.value[int(s)], dtype=np.uint16
+                        ).copy()
+                    t = local[int(s)] = kernel(base)
                 m = shv == s
                 if op == "add":
                     failed += t.add_many(hv[m])
@@ -320,7 +266,7 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
                         [store.write(s, version, t.slots)
                          for s, t in local.items()]
                         if spilled
-                        else [t.slots.tobytes() for t in local.values()]
+                        else [t.tobytes() for t in local.values()]
                     ),
                     "failed": [failed] + [0] * (len(local) - 1),
                     "n_keys": [n_keys] + [0] * (len(local) - 1),
@@ -338,10 +284,8 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
         if spilled:
             cuckoo.shard_paths[r["shard"]] = r["slots"]
         else:
-            cuckoo.shards[r["shard"]] = CuckooTable(
-                n_buckets,
-                np.frombuffer(r["slots"], dtype=np.uint16)
-                .reshape(n_buckets, _SLOTS).copy(),
+            cuckoo.shards[r["shard"]] = kernel(
+                np.frombuffer(r["slots"], dtype=np.uint16).copy()
             )
         failures += r["failed"]
     if spilled:
@@ -351,7 +295,7 @@ def _apply_sharded(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
     if failures:
         raise RuntimeError(
             f"cuckoo filter overflow: {failures} keys unplaceable — rebuild "
-            "bigger (saturated should have triggered growth first)"
+            "bigger (the growth rule should have triggered first)"
         )
     return sum(r["n_keys"] for r in rows)
 
@@ -360,18 +304,17 @@ def build_cuckoo(df: DataFrame, col: str, expected: int | None = None,
                  n_shards: int = 1,
                  spill_dir: str | None = None) -> ShardedCuckoo:
     """``expected`` is a CAPACITY hint only; ``n_items`` is always set from
-    the actual key count observed by the build pass, so the ``saturated``
-    growth signal stays truthful when a caller over-provisions."""
+    the actual key count observed by the build pass, so the growth signal
+    stays truthful when a caller over-provisions."""
     if expected is None:
         expected = df.count()
-    ck = ShardedCuckoo(expected, n_shards, spill_dir=spill_dir)
-    ck.n_items = _apply_sharded(ck, df, col, "add")
-    return ck
+    return add_into(ShardedCuckoo(expected, n_shards, spill_dir=spill_dir),
+                    df, col)
 
 
 def add_into(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
              count_items: bool = True) -> ShardedCuckoo:
-    n = _apply_sharded(cuckoo, df, col, "add")
+    n = cuckoo.add(df, col)
     if count_items:
         cuckoo.n_items += n
     return cuckoo
@@ -388,67 +331,5 @@ def delete_from(cuckoo: ShardedCuckoo, df: DataFrame, col: str,
     return cuckoo
 
 
-def filter_unseen_cuckoo(candidates: DataFrame, col: str, seen: DataFrame,
-                         cuckoo: ShardedCuckoo, materialize=None,
-                         materialize_confirmed: bool = True) -> DataFrame:
-    """Drop-in parallel of :func:`.bloom.filter_unseen` backed by the
-    cuckoo filter: definitely-new candidates bypass the shuffle, maybe-seen
-    candidates are confirmed by the exact anti-join. Same broadcast
-    lifecycle contract (caller destroys after the probe's jobs ran)."""
-    n_buckets = cuckoo.n_buckets
-    if cuckoo.spilled:
-        # spill mode: tasks read the shards their rows hash to straight
-        # from the shard store (per-worker cache, versioned paths)
-        store = cuckoo.store
-        shard_paths = list(cuckoo.shard_paths)
-
-        @F.pandas_udf(BooleanType())
-        def maybe_seen(h: pd.Series, sh: pd.Series) -> pd.Series:
-            if not len(h):
-                return pd.Series([], dtype=bool)
-            hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-            shv = sh.to_numpy(dtype=np.int32)
-            out = np.zeros(len(hv), dtype=bool)
-            for s in np.unique(shv):
-                path = shard_paths[int(s)]
-                if path is None:
-                    continue  # empty shard: definite miss
-                t = CuckooTable(
-                    n_buckets, store.read(path).reshape(n_buckets, _SLOTS)
-                )
-                m = shv == s
-                out[m] = t.contains_many(hv[m])
-            return pd.Series(out)
-    else:
-        sc = candidates.sparkSession.sparkContext
-        shard_bcasts = [sc.broadcast(t.slots.tobytes()) for t in cuckoo.shards]
-        cuckoo.register_broadcasts(shard_bcasts)
-
-        @F.pandas_udf(BooleanType())
-        def maybe_seen(h: pd.Series, sh: pd.Series) -> pd.Series:
-            if not len(h):
-                return pd.Series([], dtype=bool)
-            hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-            shv = sh.to_numpy(dtype=np.int32)
-            out = np.zeros(len(hv), dtype=bool)
-            for s in np.unique(shv):
-                t = CuckooTable(
-                    n_buckets,
-                    np.frombuffer(
-                        shard_bcasts[int(s)].value, dtype=np.uint16
-                    ).reshape(n_buckets, _SLOTS),
-                )
-                m = shv == s
-                out[m] = t.contains_many(hv[m])
-            return pd.Series(out)
-
-    h, sh = _key_cols(col, cuckoo.n_shards)
-    flagged = candidates.withColumn("__maybe", maybe_seen(h, sh))
-    if materialize is not None:
-        flagged = materialize(flagged)
-    definitely_new = flagged.filter(~F.col("__maybe")).drop("__maybe")
-    suspects = flagged.filter(F.col("__maybe")).drop("__maybe")
-    confirmed_new = suspects.join(seen.select(F.col(col)), on=col, how="left_anti")
-    if materialize is not None and materialize_confirmed:
-        confirmed_new = materialize(confirmed_new)
-    return definitely_new.unionByName(confirmed_new)
+# the probe and candidate split are the shared ones (shardstore.py)
+filter_unseen_cuckoo = filter_unseen

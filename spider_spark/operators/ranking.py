@@ -69,7 +69,7 @@ def with_global_rank(
     in bucket mode) and ``__mid`` — and must return rows/dicts with
     ``__rkey``/``cnt``/``min_mid``/``max_mid``. Callers use it to
     piggyback OTHER per-partition reductions (e.g. the crawl's
-    bloom-shard fill, bloom.make_fill_stats_collector) onto the stats
+    bloom-shard fill, bloom.ShardedBloom.fill_collector) onto the stats
     pass — one driver job instead of two, with no groupBy shuffle (the
     combined pass is mapInPandas over the checkpoint)."""
     sc = df.sparkSession.sparkContext

@@ -12,7 +12,12 @@ This module composes the engine's parts into that loop:
   lives ACROSS waves — stale URLs are *deleted* from it
   (``delete_from``), which is the whole reason the continuous path uses
   cuckoo over bloom: a bloom filter would need a full seen-table rebuild
-  every wave (O(corpus) scans at 10^10 URLs), the cuckoo pays O(wave);
+  every wave (O(corpus) scans at 10^10 URLs), the cuckoo pays O(wave).
+  Deletion is the only step this module adds: within a wave the engine
+  drives the cuckoo through the same sharded-filter lifecycle as its own
+  bloom (admit the seeds, probe and admit every round, grow by a rebuild
+  from the seen table — operators/shardstore.py), and :meth:`attach`
+  rebuilds it through that same path;
 * :meth:`CrawlEngine.crawl` runs the wave with ``prior_seen`` +
   ``start_rank``, so admission ranks keep counting monotonically across
   the corpus lifetime (a refetch is a new admission) and the wave's link
@@ -33,7 +38,7 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spider_spark.operators.cuckoo import ShardedCuckoo, build_cuckoo, delete_from
+from spider_spark.operators.cuckoo import ShardedCuckoo, delete_from
 from spider_spark.operators.recrawl import recrawl_due
 from spider_spark.plans.crawl import (
     CHECKPOINT_LEVEL,
@@ -188,11 +193,13 @@ class ContinuousCrawler:
             self.io.read("seen").select("canon_url", "depth", "admission_rank")
         )
         self.next_rank = meta["next_rank"]
-        self.filter = build_cuckoo(
-            self.seen.select("canon_url"), "canon_url",
-            expected=max(self.expected, 2 * meta["next_rank"]),
-            n_shards=self.n_shards, spill_dir=self.spill_dir,
+        self.filter = self._new_filter().rebuild(
+            self.seen, max(self.expected, 2 * meta["next_rank"])
         )
+
+    def _new_filter(self) -> ShardedCuckoo:
+        return ShardedCuckoo(self.expected, n_shards=self.n_shards,
+                             spill_dir=self.spill_dir)
 
     def _ckpt(self, df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
@@ -212,8 +219,7 @@ class ContinuousCrawler:
         if self.seen is not None:
             raise ValueError("already bootstrapped; use wave()")
         self._reset_spill()
-        self.filter = ShardedCuckoo(self.expected, n_shards=self.n_shards,
-                                    spill_dir=self.spill_dir)
+        self.filter = self._new_filter()
         engine = self._engine()
         result = engine.crawl(seeds)
         self.filter = engine.seen_filter  # may have grown
@@ -278,10 +284,8 @@ class ContinuousCrawler:
         if due_new is not None:
             n_due += due_new.count()
         if n_due:
-            delete_from(self.filter, due, "canon_url", count_items=False)
-            self.filter.n_items -= n_due
-            if self.filter.spilled:
-                self.filter.gc_spill()
+            delete_from(self.filter, due, "canon_url")
+            self.filter.gc_spill()
             self.seen = self._ckpt(
                 self.seen.join(due, on="canon_url", how="left_anti")
             )

@@ -13,7 +13,7 @@ driver-side loop of DataFrame jobs, one **round** per BFS level:
        │                         │
        │              min-depth intra-round dedupe (Q2 pinned: BFS)
        │                         │
-       │              bloom prefilter + exact anti-join vs seen  (D1/H3)
+       │           seen-filter prefilter + exact anti-join vs seen  (D1/H3)
        │                         │
        └──────── union ◀── rank admissions (depth, parent_rank, link_pos)
 
@@ -54,18 +54,8 @@ from spider_spark.functions.urlkit import (
 )
 from pyspark.storagelevel import StorageLevel
 
-from spider_spark.operators.bloom import (
-    ShardedBloom,
-    build_into,
-    filter_unseen,
-    make_fill_stats_collector,
-)
-from spider_spark.operators.cuckoo import (
-    ShardedCuckoo,
-    add_into,
-    build_cuckoo,
-    filter_unseen_cuckoo,
-)
+from spider_spark.operators.bloom import ShardedBloom
+from spider_spark.operators.shardstore import ShardedFilter, filter_unseen
 
 # serialized checkpoint storage: ~5× smaller than deserialized rows, far
 # less GC pressure, and the extra ser/deser CPU parallelizes with cores
@@ -119,15 +109,18 @@ class CrawlConfig:
                                     # Python boundary nor the link pipeline;
                                     # False = reference parity (BeautifulSoup
                                     # over every payload, crawler.py:140)
-    use_bloom: bool = True
+    use_bloom: bool = True          # engine-owned bloom seen filter (only
+                                    # with use_cache; a caller's seen_filter
+                                    # replaces it)
     bloom_fpp: float = 0.01
-    bloom_capacity: int = 1_000_000  # initial sizing HINT only: the engine
-                                    # tracks the exact seen count and rebuilds
-                                    # the filter 4× bigger from the seen table
+    bloom_capacity: int = 1_000_000  # initial sizing HINT only: the filter
+                                    # tracks the exact seen count and is
+                                    # rebuilt 4× bigger from the seen table
                                     # whenever the count outgrows capacity
+                                    # (shardstore.ShardedFilter.admit)
     bloom_shards: int = 1           # 10^10 path: shard by url-hash so each
                                     # executor task pulls only the broadcast
-                                    # shards its rows touch (bloom.py)
+                                    # shards its rows touch (shardstore.py)
     filter_spill_dir: str | None = None  # 10^10 path, part 2: seen-filter
                                     # shards live as versioned files on a
                                     # shared filesystem (built/mutated/probed
@@ -136,7 +129,8 @@ class CrawlConfig:
                                     # filter puts the WHOLE aggregate on the
                                     # driver at every build/grow (~12 GB
                                     # bloom / ~21 GB cuckoo at 10^10 URLs)
-                                    # and fails loudly past 4 GiB (bloom.py)
+                                    # and fails loudly past 4 GiB
+                                    # (shardstore.py)
     salt: int = 8                   # politeness salting factor (H4)
     politeness_site: bool = False   # budget per registrable domain (PSL
                                     # eTLD+1, functions/domains.py) instead
@@ -169,10 +163,6 @@ class CrawlConfig:
                                     # accumulated seen set (VERDICT r1 wrong-3)
     max_rounds: int | None = None
     verify_text: bool = True        # enforce byte-identical text invariant
-    rank_bucket_mode: bool = True   # arithmetic rank buckets (no sampling
-                                    # pass); False = repartitionByRange
-                                    # (A/B escape hatch; results identical
-                                    # either way — tests/test_ranking.py)
     vacuum_every: int | None = None  # durable mode: expire superseded
                                     # frontier/seen/results snapshots every K
                                     # rounds (keeps the store O(live data)
@@ -248,7 +238,7 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         robots_now=None,            # datetime for TTL evaluation
         robots_ttl_sec: float | None = None,
-        seen_filter: ShardedCuckoo | None = None,
+        seen_filter: ShardedFilter | None = None,
         content_gate=None,
         blocked_hosts=None,  # list[str] | DataFrame('host') — link-admission gate
         trap_guard: dict | None = None,   # in-crawl trap detection thresholds
@@ -271,14 +261,23 @@ class CrawlEngine:
         self.io = io
         self.rules = RobotsRules.from_df(robots, now=robots_now, ttl_sec=robots_ttl_sec)
         self.phase_times: dict[str, float] = {}  # cumulative sec per phase
-        # externally-owned DELETABLE seen filter (continuous-crawl mode):
-        # must already contain exactly prior_seen's keys; the engine adds
-        # this crawl's admissions to it and replaces it on growth (read it
-        # back via self.seen_filter after crawl()). Overrides use_bloom.
-        # Price of deletability: per-round admissions can't fold into the
-        # ranking stats pass (cuckoo tables don't OR-merge), so cuckoo mode
-        # pays one extra keyed job per round vs the bloom fill fold.
+        # the live seen filter (shardstore.ShardedFilter), driven through
+        # one bootstrap → probe → admit/grow → release path. A caller-owned
+        # one (the continuous crawl's deletable cuckoo) must already hold
+        # exactly prior_seen's keys; the engine admits this crawl's keys
+        # and may replace it on growth — read it back here after crawl().
+        # Without one, each crawl builds its own bloom (cfg.use_bloom).
+        # The gate decides: use_cache=False keeps no filter at all.
+        # Deletability's price: cuckoo tables don't OR-merge, so their
+        # per-round admissions cost one keyed add job where the bloom's
+        # fill rides the ranking stats pass (fill_collector).
+        if seen_filter is not None and not self.config.use_cache:
+            raise ValueError(
+                "seen_filter needs use_cache=True: with the seen gate off "
+                "the filter would miss this crawl's admissions"
+            )
         self.seen_filter = seen_filter
+        self._owns_filter = seen_filter is None
         # ingest-time content dedup hook (continuous-crawl near-dup gate):
         # called once per round with this round's fetched pages as a
         # ``(canon_url, text)`` DataFrame; returns the ``canon_url``s whose
@@ -491,9 +490,9 @@ class CrawlEngine:
         """``prior_seen``/``start_rank`` continue an existing corpus
         (continuous-crawl waves): seeds rank from ``start_rank``, link
         admissions are gated against ``prior_seen`` ∪ this crawl's
-        admissions, and — when an external ``seen_filter`` cuckoo is set —
-        the filter is trusted to already hold exactly ``prior_seen``'s
-        keys (the engine adds only the new admissions)."""
+        admissions, and — when a caller-owned ``seen_filter`` is set — the
+        filter is trusted to already hold exactly ``prior_seen``'s keys
+        (the engine adds only the new admissions)."""
         if isinstance(seeds, str):
             seeds = [seeds]
         if isinstance(seeds, DataFrame):
@@ -518,50 +517,26 @@ class CrawlEngine:
                     "canon_url", "depth", "admission_rank"
                 ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL),
             )
-        if self.seen_filter is not None:
-            # external deletable filter: contains prior_seen already; add
-            # the seeds (a recrawl wave's due URLs re-enter here). Grow
-            # first if the seeds would push past the design load — the
-            # contract is that the filter holds exactly prior_seen's keys,
-            # so prior_seen is the full rebuild source (None ⇒ empty).
-            ck = self.seen_filter
-            if ck.n_items + n_seeds > ck.expected:
-                bigger = 4 * max(ck.n_items + n_seeds, 1)
-                grown = (
-                    build_cuckoo(prior_seen.select("canon_url"), "canon_url",
-                                 expected=bigger, n_shards=ck.n_shards,
-                                 spill_dir=ck.spill_dir)
-                    if prior_seen is not None
-                    else ShardedCuckoo(bigger, n_shards=ck.n_shards,
-                                       spill_dir=ck.spill_dir)
-                )
-                grown.n_items = ck.n_items
-                ck.destroy_broadcasts()
-                if ck.spilled:
-                    ck.store.gc([])  # superseded filter's shard files
-                self.seen_filter = grown
-            add_into(self.seen_filter, seen.select("canon_url"), "canon_url",
-                     count_items=False)
-            self.seen_filter.n_items += n_seeds
+        keys, n_keys = seen, n_seeds
         if prior_seen is not None:
             seen = prior_seen.select(
                 "canon_url", "depth", "admission_rank"
             ).unionByName(seen)
+        filt = self._fresh_filter()
+        if filt is not None:
+            # a caller's filter holds prior_seen already and admits the
+            # seeds (a recrawl wave's due URLs re-enter here); a fresh one
+            # admits the whole initial seen set. Either may grow, rebuilt
+            # from the full seen set.
+            if self._owns_filter:
+                keys, n_keys = seen, n_seeds + (
+                    prior_seen.count() if prior_seen is not None else 0
+                )
+            filt = filt.admit(keys, n_keys, seen)
+        self.seen_filter = filt
         next_rank = start_rank + n_seeds
         results_parts: list[DataFrame] = []
         metrics: list[RoundMetrics] = []
-        bloom = (
-            ShardedBloom(self.config.bloom_capacity, self.config.bloom_fpp,
-                         self.config.bloom_shards,
-                         spill_dir=self.config.filter_spill_dir)
-            if self.config.use_bloom and self.seen_filter is None
-            else None
-        )
-        if bloom is not None:
-            build_into(bloom, seen, "canon_url", count_items=False)
-            bloom.n_items += n_seeds + (
-                prior_seen.count() if prior_seen is not None else 0
-            )
         if self.config.durable:
             # open a new epoch after any prior crawl in this store; the
             # seeds commit below is this wave's first durable write, so a
@@ -582,7 +557,7 @@ class CrawlEngine:
         state = _RoundState(frontier, seen, next_rank, r, frontier_count=n_seeds)
         try:
             while True:
-                state, round_results, m, bloom = self._run_round(state, bloom)
+                state, round_results, m = self._run_round(state)
                 results_parts.append(round_results)
                 metrics.append(m)
                 if self.config.durable:
@@ -625,23 +600,21 @@ class CrawlEngine:
 
     # -- internals -------------------------------------------------------------
 
-    def _grow_bloom(self, bloom: ShardedBloom, seen: DataFrame) -> ShardedBloom:
-        """The seen count outgrew the filter's sized-for capacity: rebuild
-        from the seen table at 4× the current count (geometric growth —
-        amortized O(1) rebuilds per key over the whole crawl), keeping fpp
-        near nominal instead of silently saturating (VERDICT r1 wrong-1)."""
-        bloom.destroy_broadcasts()  # the superseded filter's handles die here
-        bigger = ShardedBloom(
-            4 * max(bloom.n_items, 1), self.config.bloom_fpp, bloom.n_shards,
-            spill_dir=bloom.spill_dir,
-        )
-        build_into(bigger, seen, "canon_url", count_items=False)
-        bigger.n_items = bloom.n_items
-        if bloom.spilled:
-            bloom.store.gc([])  # superseded filter's shard files
-        return bigger
+    def _fresh_filter(self) -> ShardedFilter | None:
+        """The filter a crawl or resume starts from: the caller's, or a new
+        engine-owned bloom (the previous crawl's is released) — none when
+        the seen gate or the bloom is off."""
+        if not self._owns_filter:
+            return self.seen_filter
+        if self.seen_filter is not None:
+            self.seen_filter.release()
+        cfg = self.config
+        if not (cfg.use_cache and cfg.use_bloom):
+            return None
+        return ShardedBloom(cfg.bloom_capacity, cfg.bloom_fpp, cfg.bloom_shards,
+                            spill_dir=cfg.filter_spill_dir)
 
-    def _run_round(self, state: "_RoundState", bloom: ShardedBloom | None):
+    def _run_round(self, state: "_RoundState"):
         t0 = time.perf_counter()
         cfg = self.config
         r = state.round
@@ -923,13 +896,15 @@ class CrawlEngine:
 
             candidates = self._timed("trap_guard", _guard)
 
-        # ---- seen-set gate (D1/H3): bloom prefilter + exact anti-join ----
+        # ---- seen-set gate (D1/H3): filter prefilter + exact anti-join ----
         # The gate's output feeds the bucket-mode ranking below, which
         # evaluates its input exactly ONCE (hash shuffle on arithmetic
         # buckets — no range-sampling pass), so everything here stays LAZY
-        # except the bloom probe (a Python stage consumed by two branches).
+        # except the filter probe (a Python stage consumed by two branches).
         # The whole explode → min-dedupe → seen-gate → rank chain
         # materializes in a single job inside with_global_rank.
+        filt = self.seen_filter
+
         def _dedupe():
             if not cfg.use_cache:
                 # the seen gate is off, but the next frontier must still be
@@ -953,45 +928,32 @@ class CrawlEngine:
             ckpt = lambda df: df.localCheckpoint(  # noqa: E731
                 eager=True, storageLevel=CHECKPOINT_LEVEL
             )
-            if self.seen_filter is not None:
-                # continuous mode: the deletable cuckoo prefilters; same
-                # one-materialization / fold-into-ranking shape as bloom
-                return filter_unseen_cuckoo(
-                    candidates, "canon_url", seen_side, self.seen_filter,
-                    materialize=ckpt, materialize_confirmed=False,
-                )
-            if bloom is None:
-                # no prefilter: one anti-join over the full candidate set,
-                # folded into the ranking job
-                return filter_unseen(candidates, "canon_url", seen_side, None)
-            # bloom path: ONE materialization pass — the flagged candidates
-            # (explode + min-dedupe + probe in one job). Both branches are
-            # JVM filters over that checkpoint; the suspects' confirming
-            # anti-join folds into the ranking job (materialize_confirmed
-            # off — bucket mode reads the union exactly once).
+            # with a filter: ONE materialization pass — the flagged
+            # candidates (explode + min-dedupe + probe in one job). Both
+            # branches are JVM filters over that checkpoint; the suspects'
+            # confirming anti-join folds into the ranking job
+            # (materialize_confirmed off — bucket mode reads the union
+            # exactly once). Without one: a single anti-join over the full
+            # candidate set, folded into the ranking job.
             return filter_unseen(
-                candidates, "canon_url", seen_side, bloom, materialize=ckpt,
+                candidates, "canon_url", seen_side, filt, materialize=ckpt,
                 materialize_confirmed=False,
             )
 
         new = self._timed("dedupe", _dedupe)
-        if bloom is not None and cfg.use_cache:
+        collector = None
+        if filt is not None:
             # the probe stage is materialized inside _dedupe (the flagged
             # checkpoint — the only consumer of the shard broadcasts), so
             # this round's broadcasts are dead weight now — destroy them
             # before they accumulate across rounds
-            bloom.destroy_broadcasts()
-        if self.seen_filter is not None and cfg.use_cache:
-            self.seen_filter.destroy_broadcasts()
-        # ONE driver job closes the round's bookkeeping: the ranking stats
-        # pass doubles as the n_new count AND (when a bloom is live) the
-        # bloom-shard fill — mapInPandas over the ranking checkpoint, no
-        # groupBy shuffle, no separate bloom job (VERDICT r2 next-3)
-        collector = (
-            make_fill_stats_collector(bloom, "canon_url")
-            if bloom is not None
-            else None
-        )
+            filt.destroy_broadcasts()
+            # ONE driver job closes the round's bookkeeping: the ranking
+            # stats pass doubles as the n_new count AND, for a filter that
+            # offers it (the bloom), the shard fill — mapInPandas over the
+            # ranking checkpoint, no groupBy shuffle, no separate fill job
+            # (VERDICT r2 next-3)
+            collector = filt.fill_collector("canon_url")
         # arithmetic rank buckets: the order key's prefix (depth,
         # parent_rank) is dense — depth is a small bounded int, parent_rank
         # ∈ [0, next_rank) — so equal-width parent_rank ranges stratified
@@ -1000,13 +962,9 @@ class CrawlEngine:
         # evaluated exactly once) at the cost of balance only under parent
         # skew, which link fan-out spreads in practice.
         n_buckets = 4 * self.spark.sparkContext.defaultParallelism
-        bucket = (
-            F.expr(
-                f"depth * {n_buckets}L + "
-                f"((parent_rank * {n_buckets}L) div {max(state.next_rank, 1)}L)"
-            )
-            if self.config.rank_bucket_mode
-            else None
+        bucket = F.expr(
+            f"depth * {n_buckets}L + "
+            f"((parent_rank * {n_buckets}L) div {max(state.next_rank, 1)}L)"
         )
         ranked, n_new = self._timed(
             "rank",
@@ -1016,11 +974,6 @@ class CrawlEngine:
                 stats_collector=collector, bucket_expr=bucket,
             ),
         )
-        if bloom is not None and bloom.spilled:
-            # the fill job just wrote the next shard version; the probe jobs
-            # that read the previous one ran inside _dedupe — drop it
-            bloom.gc_spill()
-
         if n_new:
             # pure-JVM projection over the ranking's checkpoint — host came
             # from the parse kernel, so no UDF stage and no extra
@@ -1041,44 +994,14 @@ class CrawlEngine:
             seen = state.seen.unionByName(
                 admitted.select("canon_url", "depth", "admission_rank")
             )
-            if bloom is not None:
-                # the fill already rode the ranking stats pass (collector
-                # above); only the exact count + growth check remain
-                def _add():
-                    bloom.n_items += n_new
-                    # exact running count outgrew capacity → rebuild bigger
-                    # from the seen table before fpp degrades
-                    return self._grow_bloom(bloom, seen) if bloom.saturated else bloom
-
-                bloom = self._timed("bloom", _add)
-            if self.seen_filter is not None and cfg.use_cache:
-                # cuckoo tables don't OR-merge, so the round's admissions
-                # are a keyed add job of their own (deletability's price).
-                # Growth must happen BEFORE the add — a batch past the 95%
-                # design load can physically overflow buckets — and the
-                # rebuild source (seen) already includes this round's
-                # admissions, so the grown filter needs no separate add.
-                def _ck_add():
-                    ck = self.seen_filter
-                    if ck.n_items + n_new > ck.expected:
-                        grown = build_cuckoo(
-                            seen.select("canon_url"), "canon_url",
-                            expected=4 * max(ck.n_items + n_new, 1),
-                            n_shards=ck.n_shards, spill_dir=ck.spill_dir,
-                        )
-                        grown.n_items = ck.n_items + n_new
-                        ck.destroy_broadcasts()
-                        if ck.spilled:
-                            ck.store.gc([])  # superseded filter's files
-                        self.seen_filter = grown
-                    else:
-                        add_into(ck, ranked.select("canon_url"), "canon_url",
-                                 count_items=False)
-                        ck.n_items += n_new
-                        if ck.spilled:
-                            ck.gc_spill()
-
-                self._timed("bloom", _ck_add)
+            if filt is not None:
+                # admit the round's keys — already added when the fill rode
+                # the ranking stats pass — or grow, rebuilt from the seen
+                # table that now holds them (the probes that read the
+                # superseded shard files ran inside _dedupe)
+                self.seen_filter = self._timed("bloom", lambda: filt.admit(
+                    None if collector else ranked, n_new, seen
+                ))
             if no_politeness:
                 frontier = admitted  # carryover statically empty
             else:
@@ -1126,7 +1049,7 @@ class CrawlEngine:
                 if n_new else None
             ),
         )
-        return new_state, round_results, m, bloom
+        return new_state, round_results, m
 
     # -- durable checkpointing (E6 analog) -----------------------------------
 
@@ -1219,28 +1142,14 @@ class CrawlEngine:
         # manifest on first use (any rows a killed round appended past the
         # marker are gone with the rollback) — nothing to rebuild here, and
         # a non-durable config never writes one (ADVICE r2)
-        bloom = None
-        if self.seen_filter is not None:
-            # the in-memory cuckoo died with the killed driver — rebuild it
-            # from the rolled-back seen table at the same shard layout
-            old = self.seen_filter
-            rebuilt = build_cuckoo(
-                seen.select("canon_url"), "canon_url",
-                expected=max(old.expected, 2 * meta["next_rank"]),
-                n_shards=old.n_shards, spill_dir=old.spill_dir,
-            )
-            rebuilt.n_items = meta["next_rank"]
-            self.seen_filter = rebuilt
-        elif self.config.use_bloom:
-            # size from the resumed crawl's exact seen count (next_rank IS
-            # the number of URLs ever admitted), not the config hint
-            bloom = ShardedBloom(
-                max(self.config.bloom_capacity, 2 * meta["next_rank"]),
-                self.config.bloom_fpp, self.config.bloom_shards,
-                spill_dir=self.config.filter_spill_dir,
-            )
-            build_into(bloom, seen, "canon_url", count_items=False)
-            bloom.n_items = meta["next_rank"]
+        filt = self._fresh_filter()
+        if filt is not None:
+            # the filter's state died with the killed driver: rebuild it
+            # from the rolled-back seen table at the same shard layout,
+            # sized from the exact admission count (next_rank IS the
+            # number of URLs ever admitted), not the capacity hint
+            filt = filt.rebuild(seen, max(filt.expected, 2 * meta["next_rank"]))
+        self.seen_filter = filt
         state = _RoundState(
             frontier=frontier, seen=seen, next_rank=meta["next_rank"],
             round=meta["round"] + 1, frontier_count=frontier.count(),
@@ -1253,7 +1162,7 @@ class CrawlEngine:
         ]
         try:
             while state.frontier_count > 0 and not meta.get("done"):
-                state, round_results, m, bloom = self._run_round(state, bloom)
+                state, round_results, m = self._run_round(state)
                 metrics.append(m)
                 self._checkpoint(state, round_results, m)
                 self._maybe_vacuum(m.round)

@@ -1,9 +1,11 @@
 """Spark-level tests of the sharded bloom seen-set prefilter (D1/H3):
 distributed build, per-shard probe, and exactness of filter_unseen."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from spider_spark.operators.bloom import build_bloom, filter_unseen
+from spider_spark.operators.bloom import ShardedBloom, build_bloom, filter_unseen
+from spider_spark.operators.cuckoo import ShardedCuckoo
 
 
 def _keys(spark, lo, hi):
@@ -52,17 +54,19 @@ class TestBroadcastLifecycle:
         # never re-runs the probe UDF, so it survives the destroy
         assert out.count() == 200
 
-    def test_engine_keeps_live_broadcasts_bounded(self, spark):
+    @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+    def test_engine_keeps_live_broadcasts_bounded(self, spark, kind):
         """Across a multi-round crawl the outstanding broadcast count stays
         O(n_shards): each round's handles are destroyed inside the round
-        (a 1000-round crawl would otherwise leak ~filter-size × rounds)."""
-        import spider_spark.operators.bloom as bm
+        (a 1000-round crawl would otherwise leak ~filter-size × rounds) —
+        for the engine-owned bloom and a caller-owned cuckoo alike."""
+        from spider_spark.operators.shardstore import ShardedFilter
         from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
         from spider_spark.sources.pages import synthetic_pages
 
         peak = {"live": 0, "registered": 0, "destroyed": 0}
-        orig_reg = bm.ShardedBloom.register_broadcasts
-        orig_des = bm.ShardedBloom.destroy_broadcasts
+        orig_reg = ShardedFilter.register_broadcasts
+        orig_des = ShardedFilter.destroy_broadcasts
 
         def reg(self, handles):
             orig_reg(self, handles)
@@ -74,20 +78,25 @@ class TestBroadcastLifecycle:
             peak["destroyed"] += n
             return n
 
-        bm.ShardedBloom.register_broadcasts = reg
-        bm.ShardedBloom.destroy_broadcasts = des
+        ShardedFilter.register_broadcasts = reg
+        ShardedFilter.destroy_broadcasts = des
         try:
             pages = synthetic_pages(spark, 300).localCheckpoint(eager=True)
             eng = CrawlEngine(
                 spark, pages,
                 CrawlConfig(depth=6, bloom_shards=2, verify_text=False),
+                seen_filter=(ShardedCuckoo(10_000, n_shards=2)
+                             if kind == "cuckoo" else None),
             )
             res = eng.crawl("https://h0.example/d/0")
             rounds = len(res.metrics)
             assert rounds >= 3  # multi-round crawl, or the test proves nothing
         finally:
-            bm.ShardedBloom.register_broadcasts = orig_reg
-            bm.ShardedBloom.destroy_broadcasts = orig_des
+            ShardedFilter.register_broadcasts = orig_reg
+            ShardedFilter.destroy_broadcasts = orig_des
+        assert isinstance(
+            eng.seen_filter, ShardedCuckoo if kind == "cuckoo" else ShardedBloom
+        )
         assert peak["registered"] >= 2 * rounds  # one generation per round...
         assert peak["destroyed"] == peak["registered"]  # ...every one destroyed
         assert peak["live"] <= 2  # never more than one generation outstanding
@@ -159,7 +168,13 @@ class TestSpillMode:
             tuple(r) for r in b.seen.collect()
         }
 
-    def test_growth_preserves_spill_and_cleans_predecessor(self, spark, tmp_path):
+    @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+    def test_growth_preserves_spill_and_cleans_predecessor(self, spark,
+                                                           tmp_path, kind):
+        """A spilled filter sized for 8 keys grows mid-crawl (rebuilt from
+        the seen table, still spilled) and leaves only the live filter's
+        current shard files behind — the engine-owned bloom and a
+        caller-owned cuckoo take the same path."""
         import os
 
         from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
@@ -167,15 +182,20 @@ class TestSpillMode:
 
         pages = synthetic_pages(spark, 300).localCheckpoint(eager=True)
         spill = tmp_path / "filters"
-        # bloom_capacity=8 saturates immediately -> _grow_bloom path
-        eng = CrawlEngine(
-            spark, pages,
-            CrawlConfig(depth=3, verify_text=False, bloom_capacity=8,
-                        filter_spill_dir=str(spill)),
-        )
+        if kind == "bloom":
+            cfg = CrawlConfig(depth=3, verify_text=False, bloom_capacity=8,
+                              filter_spill_dir=str(spill))
+            initial = None
+        else:
+            cfg = CrawlConfig(depth=3, verify_text=False)
+            initial = ShardedCuckoo(8, spill_dir=str(spill))
+        eng = CrawlEngine(spark, pages, cfg, seen_filter=initial)
         res = eng.crawl("https://h0.example/d/0")
         assert res.successful_crawls > 8
-        # only the live filter's generation of files remains
-        files = os.listdir(spill)
-        prefixes = {f.split("_s")[0] for f in files}
-        assert len(prefixes) == 1, files
+        live = eng.seen_filter
+        assert live is not initial and live.spilled and live.expected > 8
+        assert live.n_items == res.seen.count()  # exact running count
+        # only the live filter's current generation of files remains
+        assert set(os.listdir(spill)) == {
+            os.path.basename(p) for p in live.shard_paths if p
+        }

@@ -189,12 +189,17 @@ class TestNoCache:
 
         tiny = synthetic_pages(spark, 10).localCheckpoint(eager=True)
         seed = "https://h0.example/d/0"
-        cached = CrawlEngine(
+        cached_eng = CrawlEngine(
             spark, tiny, CrawlConfig(depth=4, verify_text=False)
-        ).crawl(seed)
-        uncached = CrawlEngine(
+        )
+        cached = cached_eng.crawl(seed)
+        uncached_eng = CrawlEngine(
             spark, tiny, CrawlConfig(depth=4, verify_text=False, use_cache=False)
-        ).crawl(seed)
+        )
+        uncached = uncached_eng.crawl(seed)
+        # with the gate off no seen filter is built, filled or grown
+        assert cached_eng.seen_filter is not None
+        assert uncached_eng.seen_filter is None
         cached_urls = {
             r["url"] for r in cached.results.filter(F.col("fetched")).collect()
         }
@@ -203,3 +208,14 @@ class TestNoCache:
         }
         assert uncached_urls == cached_urls
         assert uncached.total_calls > cached.total_calls
+
+    def test_seen_filter_requires_cache(self, spark):
+        """A caller's filter must see every admission the next crawl
+        trusts it for; with the gate off it would not, so the combination
+        is refused up front."""
+        from spider_spark.operators.cuckoo import ShardedCuckoo
+        from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
+
+        with pytest.raises(ValueError, match="use_cache"):
+            CrawlEngine(spark, spark.range(1), CrawlConfig(use_cache=False),
+                        seen_filter=ShardedCuckoo(16))

@@ -22,7 +22,16 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+
+def default_driver_mem() -> str:
+    """Two thirds of host RAM in whole GiB (the 1M-page crawl runs in 10g
+    on a 15 GB host), between 1g and 32g. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, 2 * ram // (3 << 30)))}g"
+
+
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -86,8 +95,6 @@ def main() -> None:
                 broadcast_threshold=int(
                     os.environ.get("SPARK_GRAFT_BCAST_THRESHOLD", "100000")
                 ),
-                rank_bucket_mode=os.environ.get("SPARK_GRAFT_RANK_BUCKET", "1")
-                != "0",
             ),
         )
         t0 = time.perf_counter()
