@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: every core of the host). Prints ONE
+JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ..., plus throughput keys}
+     "queries": {...per-query sec...}, "sf": ..., "host": {...},
+     plus throughput keys}
 
 The headline metric follows BASELINE.json: frontier **pages/sec** over
 fetch-parse-dedupe crawl rounds on a synthetic Common-Crawl-style pages
@@ -16,8 +18,11 @@ table. Setup that models cluster-scalable infrastructure is UN-timed:
   cluster's aggregate shuffle bandwidth, which scales with nodes;
 * seeds are generated distributively (no driver-side URL list).
 
-Run twice (SPARK_GRAFT_CPUS=8 then 32) on the same input for the
-N-vs-4N scaling-efficiency evidence; see BENCH/BASELINE.md.
+The session, warm-up and timed frontier crawl here are the only copies:
+``tools/scaling_bench.py`` runs one scaling leg through :func:`run_leg`.
+After the main section the session stops and the N-vs-4N legs run as
+subprocesses at ``[4N, N, 4N]`` cores, ``N = nproc // 4`` (skipped below
+4 cores); see BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -25,15 +30,16 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
-
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+ROOT = pathlib.Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from crawlbench import host  # noqa: E402
 from spider_spark.operators.dedupe import (  # noqa: E402
     lsh_candidate_pairs,
     simhash,
@@ -61,23 +67,72 @@ PAGES_SCHEMA_DDL = (
     "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
 )
 
+# the production-regime scaling config: rounds big enough that the
+# parallelism-flat per-round coordination amortizes
+LEG_ENV = {
+    "SPARK_GRAFT_CRAWL_PAGES": "3000000",
+    "SPARK_GRAFT_CRAWL_SEEDS": "1500000",
+    "SPARK_GRAFT_CRAWL_DEPTH": "1",
+    "SPARK_GRAFT_CRAWL_RUNS": "1",
+}
+LEG_TIMEOUT_S = 1200
+STDERR_TAIL = 2048
+
 _T_START = time.time()
 
 
-def _git_sha() -> str:
-    """Provenance stamp so a red driver row can be matched to the exact
-    code state (the r4 modularity ambiguity was only debuggable by
-    re-running; VERDICT r4 Next #4)."""
-    import subprocess
+def _env_int(name: str, default: int) -> int:
+    return int(os.environ.get(name) or default)
 
-    try:
-        return subprocess.run(
-            ["git", "-C", str(pathlib.Path(__file__).resolve().parent),
-             "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or "unknown"
-    except Exception:
-        return "unknown"
+
+def bench_cpus() -> int:
+    return _env_int("SPARK_GRAFT_CPUS", host.nproc())
+
+
+def crawl_size() -> tuple[int, int, int, int]:
+    """(pages, seeds, depth, page filler) of the frontier crawl. 1M pages →
+    812.5k fetched over 3 rounds: big enough that per-round coordination
+    amortizes (the production regime BENCH/BASELINE.md measures), small
+    enough to keep the whole bench a few minutes. Filler 16 ≈ 1.2 KB/page."""
+    return (
+        _env_int("SPARK_GRAFT_CRAWL_PAGES", 1_000_000),
+        _env_int("SPARK_GRAFT_CRAWL_SEEDS", 250_000),
+        _env_int("SPARK_GRAFT_CRAWL_DEPTH", 2),
+        _env_int("SPARK_GRAFT_PAGE_FILLER", 16),
+    )
+
+
+def driver_mem() -> str:
+    """Two thirds of host RAM in whole GiB (the 1M-page crawl runs in 10g
+    on a 15 GB host), between 1g and 32g. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    return (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or f"{max(1, min(32, 2 * host.ram_mb() // 3072))}g")
+
+
+def bench_session(cpus: int, app: str):
+    """The bench's session: ``local[cpus]``, 2×cpus shuffle partitions,
+    shuffle on tmpfs when there is one, and the shared warehouse that
+    holds the content-keyed pages tables."""
+    conf = {
+        "spark.sql.warehouse.dir": "/tmp/spider_warehouse",
+        "spark.driver.memory": driver_mem(),
+    }
+    if os.path.isdir("/dev/shm"):
+        conf["spark.local.dir"] = "/dev/shm/spark-local"
+    spark = get_spark(app_name=app, master=f"local[{cpus}]",
+                      shuffle_partitions=2 * cpus, extra_conf=conf)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def host_stamp(spark) -> dict:
+    """The host fingerprint, carrying the driver memory this session was
+    given rather than crawlbench's own sizing rule."""
+    stamp = host.fingerprint(spark)
+    del stamp["driver_mem_mb"]
+    stamp["driver_mem"] = spark.sparkContext.getConf().get("spark.driver.memory")
+    return stamp
 
 
 def force(df):
@@ -111,122 +166,169 @@ def bucketed_pages(spark, n_pages: int, filler: int, buckets: int = 64):
     return spark.table(tbl)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = -1.0
-    # 1M pages → 812.5k fetched over 3 rounds: big enough that per-round
-    # coordination amortizes (the production regime BENCH/BASELINE.md
-    # measures), small enough to keep the whole bench a few minutes
-    n_pages = int(os.environ.get("SPARK_GRAFT_CRAWL_PAGES", "1000000"))
-    n_seeds = int(os.environ.get("SPARK_GRAFT_CRAWL_SEEDS", "250000"))
-    depth = int(os.environ.get("SPARK_GRAFT_CRAWL_DEPTH", "2"))
-    filler = int(os.environ.get("SPARK_GRAFT_PAGE_FILLER", "16"))  # ~1.2 KB/page
-
-    local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else None
-    extra = {"spark.sql.warehouse.dir": "/tmp/spider_warehouse"}
-    if local_dir:
-        extra["spark.local.dir"] = local_dir
-    spark = get_spark(
-        app_name=f"spider-spark-bench-{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * cpus,
-        extra_conf=extra,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    queries: dict[str, float] = {}
-
-    # ---- pages table at rest, bucketed (un-timed) -----------------------
-    pages = bucketed_pages(spark, n_pages, filler)
-
-    # ---- warmup (un-timed): JIT the JVM, fork the Python UDF workers ----
-    # models a long-running cluster; without it the first timed phase pays
-    # one-off startup that has nothing to do with the job being measured
-    import pandas as pd  # noqa: F401
+def warm_up(spark, pages) -> None:
+    """Un-timed: JIT the JVM and fork the Python UDF workers. Models a
+    long-running cluster; without it the first timed phase pays one-off
+    startup that has nothing to do with the job being measured."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _warm(x):
         return x
 
-    spark.range(0, 100_000, 1, 2 * cpus).select(_warm(F.col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    pages.limit(1000).write.format("noop").mode("overwrite").save()
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    force(spark.range(0, 100_000, 1, parts).select(_warm(F.col("id"))))
+    force(pages.limit(1000))
+
+
+def frontier_crawls(spark, pages, n_pages: int, n_seeds: int, depth: int,
+                    runs: int, **knobs) -> list[dict]:
+    """Time ``runs`` back-to-back frontier crawls from every
+    ``n_pages // n_seeds``-th page; one record per run. ``knobs`` are
+    extra :class:`CrawlConfig` fields (budget, waves, round cap).
+
+    Best-of-N: single samples on a virtualized box swing ±3-4× on
+    individual phases (BENCH/BASELINE.md methodology), so the best run is
+    the machine's demonstrated capability; every run is reported."""
+    seeds = spark.range(0, n_pages, max(1, n_pages // n_seeds), 64).select(
+        url_expr(F.col("id")).alias("url")
+    )
+    config = CrawlConfig(depth=depth, verify_text=False,
+                         bloom_capacity=2 * n_pages,
+                         broadcast_threshold=100_000, **knobs)
+    records = []
+    for _ in range(runs):
+        engine = CrawlEngine(spark, pages, config)
+        t0 = time.perf_counter()
+        result = engine.crawl(seeds, seeds_canonical=True, seeds_unique=True)
+        sec = time.perf_counter() - t0
+        records.append({
+            "crawl_sec": round(sec, 3),
+            "pages_per_sec": round(result.successful_crawls / sec, 1),
+            "fetched": result.successful_crawls,
+            "rounds": len(result.metrics),
+            "carryover": sum(m.carryover for m in result.metrics),
+            "phase_sec": {k: round(v, 2) for k, v in engine.phase_times.items()},
+        })
+    return records
+
+
+def run_leg() -> dict:
+    """One scaling leg: the frontier crawl alone at ``local[cpus]``, as the
+    record ``tools/scaling_bench.py`` prints."""
+    cpus = bench_cpus()
+    n_pages, n_seeds, depth, filler = crawl_size()
+    spark = bench_session(cpus, f"spider-scaling-{cpus}")
+    pages = bucketed_pages(spark, n_pages, filler)
+    warm_up(spark, pages)
+    runs = frontier_crawls(spark, pages, n_pages, n_seeds, depth,
+                           _env_int("SPARK_GRAFT_CRAWL_RUNS", 1))
+    record = {
+        "cpus": cpus,
+        "n_pages": n_pages,
+        "runs": runs,
+        "git_sha": host.git_sha() or "unknown",
+        "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "host": host_stamp(spark),
+    }
+    host.stop_spark(spark)
+    return record
+
+
+def leg_plan(nproc: int) -> list[int] | None:
+    """Cores of the three scaling legs, ``[4N, N, 4N]`` with ``N = nproc //
+    4``: both adjacent pairs plus best-vs-best. ``None`` below 4 cores,
+    where a 4N leg would oversubscribe the host."""
+    n = nproc // 4
+    return [4 * n, n, 4 * n] if n else None
+
+
+def leg_env(cpus: int, environ=None) -> dict[str, str]:
+    """A leg's environment: the parent's, minus every inherited
+    ``SPARK_GRAFT_*`` tuning variable, plus only what the leg sets."""
+    environ = os.environ if environ is None else environ
+    env = {k: v for k, v in environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.update(LEG_ENV, SPARK_GRAFT_CPUS=str(cpus))
+    return env
+
+
+def _tail(stderr) -> str:
+    if isinstance(stderr, bytes):  # TimeoutExpired may carry raw bytes
+        stderr = stderr.decode(errors="replace")
+    return (stderr or "")[-STDERR_TAIL:]
+
+
+def scaling_legs(plan: list[int]) -> dict:
+    """Run the legs as ``tools/scaling_bench.py`` subprocesses, one after
+    another, and report the N-vs-4N efficiency. A failed leg ends the
+    series with its stderr tail; it never kills the artifact."""
+    legs = []
+    for cpus in plan:
+        try:
+            out = subprocess.run(
+                [sys.executable, str(ROOT / "tools" / "scaling_bench.py")],
+                capture_output=True, text=True, timeout=LEG_TIMEOUT_S,
+                env=leg_env(cpus),
+            )
+        except subprocess.TimeoutExpired as e:
+            return {"error": f"local[{cpus}] leg timed out after "
+                             f"{LEG_TIMEOUT_S} s", "stderr_tail": _tail(e.stderr)}
+        lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+        if out.returncode or not lines:
+            return {"error": f"local[{cpus}] leg exited {out.returncode}",
+                    "stderr_tail": _tail(out.stderr)}
+        legs.append(json.loads(lines[-1]))
+    big = [r["crawl_sec"] for leg in legs if leg["cpus"] == plan[0]
+           for r in leg["runs"]]
+    small = [r["crawl_sec"] for leg in legs if leg["cpus"] == plan[1]
+             for r in leg["runs"]]
+    return {
+        "config": "3M pages / 1.5M seeds / depth 1 (2 rounds)",
+        "legs": [{"cpus": leg["cpus"], "runs": leg["runs"]} for leg in legs],
+        "pair_adjacent": [
+            round(small[0] / (4 * big[0]), 3),
+            round(small[0] / (4 * big[1]), 3),
+        ],
+        "efficiency_best": round(min(small) / (4 * min(big)), 3),
+    }
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = bench_cpus()
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        sf = -1.0
+    n_pages, n_seeds, depth, filler = crawl_size()
+    n_runs = _env_int("SPARK_GRAFT_CRAWL_RUNS", 2)
+
+    spark = bench_session(cpus, f"spider-spark-bench-{cpus}")
+    queries: dict[str, float] = {}
+    pages = bucketed_pages(spark, n_pages, filler)
+    warm_up(spark, pages)
 
     # ---- q1: the headline frontier crawl -------------------------------
-    seeds_df = spark.range(0, n_pages, max(1, n_pages // n_seeds), 64).select(
-        url_expr(F.col("id")).alias("url")
-    )
-    engine = CrawlEngine(
-        spark,
-        pages,
-        CrawlConfig(
-            depth=depth,
-            verify_text=False,
-            bloom_capacity=2 * n_pages,
-            broadcast_threshold=100_000,
-        ),
-    )
-    # best-of-N back-to-back runs: single samples on this virtualized box
-    # swing ±3-4× on individual phases (BENCH/BASELINE.md methodology) —
-    # the best run is the machine's demonstrated capability; every run's
-    # wall-clock is reported alongside
-    n_runs = int(os.environ.get("SPARK_GRAFT_CRAWL_RUNS", "2"))
-    crawl_runs = []
-    result = None
-    for _ in range(n_runs):
-        run_engine = CrawlEngine(spark, pages, engine.config)
-        t0 = time.perf_counter()
-        result = run_engine.crawl(seeds_df, seeds_canonical=True, seeds_unique=True)
-        sec = time.perf_counter() - t0
-        if not crawl_runs or sec < min(crawl_runs):
-            engine = run_engine  # phase_sec reported from the best run
-        crawl_runs.append(sec)
-    crawl_sec = min(crawl_runs)
-    fetched = result.successful_crawls
-    queries["crawl_frontier"] = round(crawl_sec, 3)
-    pages_per_sec = fetched / crawl_sec if crawl_sec else 0.0
+    crawl_runs = frontier_crawls(spark, pages, n_pages, n_seeds, depth, n_runs)
+    best = min(crawl_runs, key=lambda r: r["crawl_sec"])
+    queries["crawl_frontier"] = best["crawl_sec"]
 
     # ---- q2: politeness-budgeted crawl (north-rule scheduler in-path) ---
-    # smaller frontier, per-host budget on: measures the salted two-stage
-    # top-k scheduler + carryover rounds
-    seeds_small = spark.range(0, n_pages, max(1, n_pages // (n_seeds // 25)), 64).select(
-        url_expr(F.col("id")).alias("url")
+    # smaller frontier, per-host budget on: measures the two-window top-k
+    # scheduler + carryover rounds
+    polite_runs = frontier_crawls(
+        spark, pages, n_pages, n_seeds // 25, 2, n_runs,
+        # the hot host holds 50% of the frontier; the budget must let it
+        # drain in a handful of carryover rounds, not hundreds
+        budget=_env_int("SPARK_GRAFT_BUDGET", 1000),
+        # batch several politeness windows per Spark round so small
+        # budgets aren't fixed-cost-bound (seen set is invariant;
+        # operators/politeness.py docstring)
+        waves=_env_int("SPARK_GRAFT_WAVES", 4),
+        max_rounds=8,
     )
-    polite = CrawlEngine(
-        spark,
-        pages,
-        CrawlConfig(
-            depth=2,
-            # the hot host holds 50% of the frontier; the budget must let it
-            # drain in a handful of carryover rounds, not hundreds
-            budget=int(os.environ.get("SPARK_GRAFT_BUDGET", "1000")),
-            # batch several politeness windows per Spark round so small
-            # budgets aren't fixed-cost-bound (seen set is invariant;
-            # operators/politeness.py docstring)
-            waves=int(os.environ.get("SPARK_GRAFT_WAVES", "4")),
-            verify_text=False,
-            bloom_capacity=2 * n_pages,
-            broadcast_threshold=100_000,
-            max_rounds=8,
-        ),
-    )
-    polite_runs = []
-    presult = None
-    for _ in range(n_runs):
-        run_polite = CrawlEngine(spark, pages, polite.config)
-        t0 = time.perf_counter()
-        presult = run_polite.crawl(
-            seeds_small, seeds_canonical=True, seeds_unique=True
-        )
-        polite_runs.append(time.perf_counter() - t0)
-    polite_sec = min(polite_runs)
-    queries["crawl_polite"] = round(polite_sec, 3)
-    polite_pps = presult.successful_crawls / polite_sec if polite_sec else 0.0
+    polite_best = min(polite_runs, key=lambda r: r["crawl_sec"])
+    queries["crawl_polite"] = polite_best["crawl_sec"]
 
     # ---- pipeline ops over the driver tables ---------------------------
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -645,14 +747,12 @@ def main() -> None:
 
     # ---- N-vs-4N scaling pair, in the artifact proper -------------------
     # BASELINE.json's north rule demands ≥0.8 throughput scaling
-    # efficiency between N and 4N executors; the sandbox proxy is
-    # local[2] vs local[8] on the same input (the box cannot scale 8→32
-    # on any workload — see BENCH/BASELINE.md). Run the crawl-only
-    # harness as subprocesses at 8c / 2c / 8c on the production-regime
-    # 3M-page config (rounds big enough that the parallelism-flat
-    # per-round coordination amortizes), then report both adjacent pairs
-    # and best-vs-best so the artifact-of-record carries the pair, not
-    # prose. Disable with SPARK_GRAFT_SCALING=0.
+    # efficiency between N and 4N executors; the one-box proxy is
+    # local[N] vs local[4N] on the same input. The session stops first so
+    # its driver JVM is not resident while the legs run. Disable with
+    # SPARK_GRAFT_SCALING=0.
+    stamp = host_stamp(spark)
+    host.stop_spark(spark)
     scaling = None
     if (os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
             and time.time() - _T_START < 2400):
@@ -660,47 +760,8 @@ def main() -> None:
         # box is heavily loaded — the legs would record window noise and
         # risk running the artifact into a harness timeout; skip and let
         # the standalone tools/scaling_bench.py recordings stand
-        import subprocess
-
-        def _leg(leg_cpus: int):
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_CPUS=str(leg_cpus),
-                SPARK_GRAFT_CRAWL_PAGES="3000000",
-                SPARK_GRAFT_CRAWL_SEEDS="1500000",
-                SPARK_GRAFT_CRAWL_DEPTH="1",
-                SPARK_GRAFT_REPEATS="1",
-            )
-            out = subprocess.run(
-                [sys.executable,
-                 str(pathlib.Path(__file__).resolve().parent
-                     / "tools" / "scaling_bench.py")],
-                capture_output=True, text=True, timeout=1200, env=env,
-            )
-            line = [ln for ln in out.stdout.splitlines()
-                    if ln.startswith("{")][-1]
-            return json.loads(line)
-
-        try:
-            legs = [_leg(8), _leg(2), _leg(8)]
-            t8 = [r["crawl_sec"] for leg in legs if leg["cpus"] == 8
-                  for r in leg["runs"]]
-            t2 = [r["crawl_sec"] for leg in legs if leg["cpus"] == 2
-                  for r in leg["runs"]]
-            scaling = {
-                "config": "3M pages / 1.5M seeds / depth 1 (2 rounds)",
-                "legs": [
-                    {"cpus": leg["cpus"], "runs": leg["runs"]}
-                    for leg in legs
-                ],
-                "pair_adjacent": [
-                    round(t2[0] / (4 * t8[0]), 3),
-                    round(t2[0] / (4 * t8[1]), 3),
-                ],
-                "efficiency_best": round(min(t2) / (4 * min(t8)), 3),
-            }
-        except Exception as e:  # a failed pair must not kill the artifact
-            scaling = {"error": str(e)[:300]}
+        plan = leg_plan(host.nproc())
+        scaling = scaling_legs(plan) if plan else {"skipped": "nproc < 4"}
 
     total = round(sum(queries.values()), 3)
     print(
@@ -711,16 +772,16 @@ def main() -> None:
                 "unit": "sec",
                 "queries": queries,
                 "sf": sf,
-                "git_sha": _git_sha(),
+                "git_sha": host.git_sha() or "unknown",
                 "wall_clock_utc": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 "bench_elapsed_sec": round(time.time() - _T_START, 1),
-                "pages_per_sec": round(pages_per_sec, 1),
-                "pages_fetched": fetched,
-                "crawl_rounds": len(result.metrics),
-                "polite_pages_per_sec": round(polite_pps, 1),
-                "polite_rounds": len(presult.metrics),
-                "polite_carryover": sum(m.carryover for m in presult.metrics),
+                "pages_per_sec": best["pages_per_sec"],
+                "pages_fetched": best["fetched"],
+                "crawl_rounds": best["rounds"],
+                "polite_pages_per_sec": polite_best["pages_per_sec"],
+                "polite_rounds": polite_best["rounds"],
+                "polite_carryover": polite_best["carryover"],
                 "recrawl_due_urls": n_due,
                 "graph_nodes": g_nodes,
                 "graph_edges": g_nodes * G_DEG,
@@ -728,11 +789,12 @@ def main() -> None:
                 "graph_cc_clusters": n_clusters,
                 "n_pages_table": n_pages,
                 "cpus": cpus,
-                "crawl_frontier_all_runs": [round(s, 3) for s in crawl_runs],
-                "crawl_polite_all_runs": [round(s, 3) for s in polite_runs],
+                "crawl_frontier_all_runs": [r["crawl_sec"] for r in crawl_runs],
+                "crawl_polite_all_runs": [r["crawl_sec"] for r in polite_runs],
                 "op_all_runs": op_all_runs,
-                "phase_sec": {k: round(v, 2) for k, v in engine.phase_times.items()},
+                "phase_sec": best["phase_sec"],
                 "scaling_2_to_8": scaling,
+                "host": stamp,
             }
         )
     )

@@ -106,7 +106,6 @@ def cmd_crawl(args) -> int:
         budget=args.concur if args.concur and args.concur > 0 else None,
         waves=max(1, getattr(args, "waves", 1)),
         max_fetch_per_round=max_fetch if max_fetch and max_fetch > 0 else None,
-        overwrite=args.overwrite,
         use_cache=args.cache,
         verify_text=False,
         durable=durable,

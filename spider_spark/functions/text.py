@@ -55,14 +55,6 @@ def alpha_ratio(col: Column) -> Column:
     )
 
 
-def punct_ratio(col: Column) -> Column:
-    """Share of punctuation characters (.,;:!?). SQL analog with the same
-    character class."""
-    return (
-        F.length(col) - F.length(F.regexp_replace(col, r"[.,;:!?]", ""))
-    ) * 1.0 / F.greatest(F.length(col), F.lit(1))
-
-
 def mean_word_len(col: Column) -> Column:
     """Mean whitespace-token length. SQL: ``length(regexp_replace(trim(x),
     '\\s+', '', 'g')) * 1.0 / greatest(token_count, 1)``."""

@@ -171,24 +171,12 @@ def make_seed_canon_udf():
     return seed_canon
 
 
-def make_content_ref_udf():
-    """Arrow-batched ``canon_url -> content_ref`` (deviation D1 naming)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def ref_udf(url: pd.Series) -> pd.Series:
-        return url.map(content_ref)
-
-    return ref_udf
-
-
 def content_ref_col(url, host):
     """JVM Column form of :func:`content_ref` — bit-identical to Python's
     ``uuid.uuid5(NAMESPACE_URL, url)`` but built from ``sha1`` +
     substring surgery, so the results projection stays inside
     whole-stage codegen (no Python stage in the crawl's final_results
-    job; the pandas UDF above remains for callers without a host
-    column). RFC 4122 §4.3: uuid5 = SHA-1(namespace ‖ name)[:16] with
+    job). RFC 4122 §4.3: uuid5 = SHA-1(namespace ‖ name)[:16] with
     the version nibble forced to 5 and the variant's top bits to 10."""
     from pyspark.sql import functions as F
 

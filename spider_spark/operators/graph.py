@@ -175,6 +175,95 @@ def _iter_edge_relation(edges: DataFrame) -> DataFrame:
     return wedges.join(deg, on="src").repartition(n_part, "src").persist()
 
 
+def _graph_nodes(edges: DataFrame) -> DataFrame:
+    """``(node)``: the distinct endpoints of ``edges(src, dst)``, persisted
+    (the caller unpersists)."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .persist()
+    )
+
+
+def _damped_rank(edges: DataFrame, seeds: DataFrame | None, n_iter: int,
+                 scale: int, out_col: str) -> DataFrame:
+    """The integer fixed-point damped power iteration behind
+    :func:`pagerank` and :func:`trustrank`. Teleport and dangling mass go
+    to the seed set S: ``seeds=None`` means S = every node (uniform
+    teleport, PageRank), and then no seed join, seed count or ``__seed``
+    column enters the plan. With S = all nodes the seeded terms
+    ``(15*scale) div (100*|S|)``, ``scale div |S|`` and ``dang div |S|``
+    are PageRank's exactly."""
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    nodes = _graph_nodes(edges)
+    # the dangling-node set is fixed (deg never changes), so the rank state
+    # carries a has-out-edges flag: per iteration the sink mass is a scan +
+    # 1-row aggregate over the checkpointed ranks, never a repeated
+    # anti-join against deg
+    state = nodes.join(
+        deg.select(F.col("src").alias("node"), F.lit(True).alias("__out")),
+        on="node", how="left",
+    ).select("node", F.coalesce("__out", F.lit(False)).alias("__out"))
+    carry = ["node", "__out"]
+    seed_nodes = None
+    if seeds is None:
+        n_teleport = nodes.count()
+    else:
+        seed_nodes = nodes.join(
+            seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
+            on="node", how="left_semi",
+        ).persist()
+        n_teleport = seed_nodes.count()
+        if n_teleport == 0:
+            raise ValueError("trustrank: no seed appears in the graph")
+        # the seed flag rides the checkpointed rank state like __out does
+        state = state.join(seed_nodes.withColumn("__seed", F.lit(True)),
+                           on="node", how="left")
+        state = state.select(*carry, F.col("__seed").isNotNull().alias("__seed"))
+        carry.append("__seed")
+
+    def gate(sql: str) -> str:
+        """A teleport term: every node's, or only a seed's."""
+        if seeds is None:
+            return f"({sql})"
+        return f"(CASE WHEN __seed THEN {sql} ELSE 0L END)"
+
+    base = (PR_DAMP_DEN - PR_DAMP_NUM) * scale // (PR_DAMP_DEN * n_teleport)
+    update = F.expr(
+        f"{gate(f'{base}L')} + ({PR_DAMP_NUM} * (coalesce(inc, 0L)"
+        f" + {gate(f'dang div {n_teleport}L')})) div {PR_DAMP_DEN}"
+    )
+    ranks = state.select(
+        *carry, F.expr(gate(f"{scale // n_teleport}L")).alias("rank")
+    ).localCheckpoint(eager=True)
+    srcs = _iter_edge_relation(edges)
+    for _ in range(n_iter):
+        contrib = (
+            srcs.join(ranks, srcs["src"] == ranks["node"])
+            .select(F.col("dst"), F.expr("(rank div deg) * w").alias("c"))
+        )
+        incoming = contrib.groupBy(F.col("dst").alias("inode")).agg(
+            F.sum("c").alias("inc")
+        )
+        # sink mass: one-row aggregate, broadcast into the update
+        dangling = ranks.filter(~F.col("__out")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
+        )
+        ranks = (
+            ranks.select(*carry)
+            .join(incoming, F.col("node") == incoming["inode"], "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(*carry, update.alias("rank"))
+            .localCheckpoint(eager=True)
+        )
+    srcs.unpersist()
+    nodes.unpersist()
+    if seed_nodes is not None:
+        seed_nodes.unpersist()
+    return ranks.select(F.col("node"), F.col("rank").alias(out_col))
+
+
 def pagerank(edges: DataFrame, n_iter: int = 10,
              scale: int = PR_SCALE) -> DataFrame:
     """``(node, rank_fp)`` after ``n_iter`` damped power iterations over the
@@ -197,68 +286,7 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
     2^63`` keep everything inside int64 regardless of graph size. Per
     iteration: one contribution shuffle over the host-level
     (pre-aggregated) edge list plus a one-row dangling-sum broadcast."""
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    base = (PR_DAMP_DEN - PR_DAMP_NUM) * scale // (PR_DAMP_DEN * n_nodes)
-    # the dangling-node set is fixed (deg never changes), so the rank state
-    # carries a has-out-edges flag: per iteration the sink mass is a scan +
-    # 1-row aggregate over the checkpointed ranks, never a repeated
-    # anti-join against deg
-    ranks = (
-        nodes.join(
-            deg.select(F.col("src").alias("node"),
-                       F.lit(True).alias("__out")),
-            on="node", how="left",
-        )
-        .select(
-            "node",
-            F.lit(scale // n_nodes).cast("long").alias("rank"),
-            F.coalesce("__out", F.lit(False)).alias("__out"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    srcs = _iter_edge_relation(edges)
-    for _ in range(n_iter):
-        contrib = (
-            srcs.join(ranks, srcs["src"] == ranks["node"])
-            .select(
-                F.col("dst"),
-                F.expr("(rank div deg) * w").alias("c"),
-            )
-        )
-        incoming = contrib.groupBy(F.col("dst").alias("inode")).agg(
-            F.sum("c").alias("inc")
-        )
-        # sink mass: one-row aggregate, broadcast into the update
-        dangling = ranks.filter(~F.col("__out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
-        )
-        ranks = (
-            ranks.select("node", "__out")
-            .join(incoming, F.col("node") == incoming["inode"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                F.col("node"),
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * (coalesce(inc, 0L)"
-                        f" + (dang div {n_nodes}L))) div {PR_DAMP_DEN}"
-                    )
-                ).alias("rank"),
-                F.col("__out"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    srcs.unpersist()
-    nodes.unpersist()
-    return ranks.select(F.col("node"), F.col("rank").alias("rank_fp"))
+    return _damped_rank(edges, None, n_iter, scale, "rank_fp")
 
 
 def trustrank(edges: DataFrame, seeds: DataFrame, n_iter: int = 10,
@@ -277,75 +305,8 @@ def trustrank(edges: DataFrame, seeds: DataFrame, n_iter: int = 10,
     dangling mass redistributes to seeds (``dang div |S|``) — the
     teleport distribution, per the paper, not uniform. Seeds are
     intersected with the graph's nodes on both engines. Per-iteration
-    cost is identical to a PageRank step; the seed flag rides the
-    checkpointed rank state like ``__out`` does."""
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    seed_nodes = nodes.join(
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
-        on="node", how="left_semi",
-    ).persist()
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        raise ValueError("trustrank: no seed appears in the graph")
-    base = (PR_DAMP_DEN - PR_DAMP_NUM) * scale // (PR_DAMP_DEN * n_seeds)
-    ranks = (
-        nodes
-        .join(deg.select(F.col("src").alias("node"),
-                         F.lit(True).alias("__out")), on="node", how="left")
-        .join(seed_nodes.withColumn("__seed", F.lit(True)),
-              on="node", how="left")
-        .select(
-            "node",
-            F.when(F.col("__seed").isNotNull(),
-                   F.lit(scale // n_seeds)).otherwise(F.lit(0))
-             .cast("long").alias("rank"),
-            F.coalesce("__out", F.lit(False)).alias("__out"),
-            F.col("__seed").isNotNull().alias("__seed"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    srcs = _iter_edge_relation(edges)
-    for _ in range(n_iter):
-        contrib = (
-            srcs.join(ranks, srcs["src"] == ranks["node"])
-            .select(F.col("dst"), F.expr("(rank div deg) * w").alias("c"))
-        )
-        incoming = contrib.groupBy(F.col("dst").alias("inode")).agg(
-            F.sum("c").alias("inc")
-        )
-        dangling = ranks.filter(~F.col("__out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dang")
-        )
-        ranks = (
-            ranks.select("node", "__out", "__seed")
-            .join(incoming, F.col("node") == incoming["inode"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                F.col("node"),
-                (
-                    F.when(F.col("__seed"), F.lit(base)).otherwise(F.lit(0))
-                    .cast("long")
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * (coalesce(inc, 0L)"
-                        f" + (CASE WHEN __seed THEN dang div {n_seeds}L"
-                        f" ELSE 0L END))) div {PR_DAMP_DEN}"
-                    )
-                ).alias("rank"),
-                F.col("__out"),
-                F.col("__seed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    srcs.unpersist()
-    nodes.unpersist()
-    seed_nodes.unpersist()
-    return ranks.select(F.col("node"), F.col("rank").alias("trust_fp"))
+    cost is identical to a PageRank step."""
+    return _damped_rank(edges, seeds, n_iter, scale, "trust_fp")
 
 
 def trustrank_sql(edges_sql: str, seeds_sql: str, n_iter: int = 10,
@@ -435,12 +396,7 @@ def opic(edges: DataFrame, n_iter: int = 10, scale: int = PR_SCALE,
     O(1) state at any graph size). When ``stats`` is supplied, the final
     virtual-node cash and round count are written to it."""
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _graph_nodes(edges)
     n_nodes = nodes.count()
     state = (
         nodes.join(deg.select(F.col("src").alias("node"),
@@ -592,12 +548,7 @@ def hits(edges: DataFrame, n_iter: int = 10,
         .persist()
     )
     wedges_dst = wedges.repartition(n_part, "dst").persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _graph_nodes(edges)
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         total = raw.agg(

@@ -91,7 +91,6 @@ class CrawlConfig:
 
     depth: int = 1                  # --depth (cli.py:64-66)
     budget: int | None = None       # per-host per-round; None ≡ reference Q4 no-op
-    overwrite: bool = True          # --no-overwrite → False (cli.py:84-88)
     use_cache: bool = True          # --no-cache → False (use_cache.py:19-28):
                                     # seen-set gate off; links refetched each
                                     # round they reappear (intra-round dedupe

@@ -20,7 +20,6 @@ import hashlib
 import json
 import os
 import pathlib
-import subprocess
 import sys
 import tempfile
 import time
@@ -31,6 +30,7 @@ sys.path.insert(0, str(REPO))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from crawlbench.host import git_sha  # noqa: E402
 from spider_spark.session import get_spark  # noqa: E402
 
 TABLES = [
@@ -142,13 +142,7 @@ def main():
                             "sec": round(time.time() - t0, 1)}
             n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
-    try:
-        sha = subprocess.run(
-            ["git", "-C", str(REPO), "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or "unknown"
-    except Exception:
-        sha = "unknown"
+    sha = git_sha() or "unknown"
     stamp = time.gmtime()
     out = pathlib.Path(tempfile.gettempdir()) / (
         f"contract_replay_{time.strftime('%Y%m%dT%H%M%SZ', stamp)}"
