@@ -154,6 +154,24 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+# List outputs ride the wire as ONE string, because the driver
+# canonicalizes scalar cells only. The separator is ASCII RS (0x1e), which
+# can occur neither in a robots.txt value (str.splitlines() breaks lines on
+# it) nor in a table cell (the kernel collapses str.split() whitespace,
+# which includes it). Both engines skip NULL elements (concat_ws /
+# array_to_string), render an empty list as '' and keep a NULL list NULL.
+_LIST_SEP = "\x1e"
+
+
+def _joined(col) -> F.Column:
+    return F.when(col.isNotNull(), F.concat_ws(_LIST_SEP, col))
+
+
+def _joined_sql(expr: str) -> str:
+    return (f"CASE WHEN ({expr}) IS NOT NULL THEN "
+            f"coalesce(array_to_string({expr}, chr(30)), '') END")
+
+
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_shipped(spark)
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1675,7 +1693,10 @@ def _q_release_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("retired doc "), i.cast("string")).alias("text"),
         )
     )
-    return token_drift(old, docs, k=TOKEN_DRIFT_K)
+    # drift rides the wire as a plain-digit string (the
+    # community_modularity pattern)
+    out = token_drift(old, docs, k=TOKEN_DRIFT_K)
+    return out.withColumn("drift", F.col("drift").cast("string"))
 
 
 def _sql_release_token_drift() -> str:
@@ -1691,7 +1712,8 @@ def _sql_release_token_drift() -> str:
              'retired doc ' || doc_id::VARCHAR AS text
       FROM documents WHERE doc_id % 17 = 0
     )"""
-    return token_drift_sql(old, "documents", k=TOKEN_DRIFT_K)
+    return (f"SELECT term, n_old, n_new, drift::VARCHAR AS drift FROM "
+            f"({token_drift_sql(old, 'documents', k=TOKEN_DRIFT_K)})")
 
 
 PACK_SEQ_LEN = 4096
@@ -3203,7 +3225,7 @@ def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = winnow_fingerprints(_docs(spark, sf_dir))
     return fps.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_fps"),
-        F.sum(F.col("h").cast("decimal(38,0)")).alias("fp_sum"),
+        F.sum(F.col("h").cast("decimal(38,0)")).cast("string").alias("fp_sum"),
     )
 
 
@@ -3211,7 +3233,7 @@ def _sql_winnow() -> str:
     from spider_spark.operators.winnow import winnow_sql
 
     return (
-        f"SELECT doc_id, count(*)::BIGINT AS n_fps, sum(h) AS fp_sum "
+        f"SELECT doc_id, count(*)::BIGINT AS n_fps, sum(h)::VARCHAR AS fp_sum "
         f"FROM ({winnow_sql()}) GROUP BY doc_id"
     )
 
@@ -5334,15 +5356,17 @@ def _q_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(star, sitemap, override).alias("robots_txt"),
     )
     return parse_robots_df(robots, agent="spider").select(
-        "host", "disallow_prefixes", "crawl_delay",
+        "host", _joined(F.col("disallow_prefixes")).alias("disallow_prefixes"),
+        "crawl_delay",
         F.size("sitemaps").cast("long").alias("n_sitemaps"),
     )
 
 
-_SQL_ROBOTS_RULES = """
+_SQL_ROBOTS_RULES = f"""
 SELECT 'h' || i || '.example' AS host,
-       CASE WHEN i % 3 = 0 THEN ['/spider/' || i || '/']
-            ELSE ['/private/' || i || '/', '/tmp/'] END AS disallow_prefixes,
+       {_joined_sql("CASE WHEN i % 3 = 0 THEN ['/spider/' || i || '/'] "
+                    "ELSE ['/private/' || i || '/', '/tmp/'] END")}
+         AS disallow_prefixes,
        CASE WHEN i % 3 = 0 THEN CAST(i % 7 AS DOUBLE) END AS crawl_delay,
        (CASE WHEN i % 5 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_sitemaps
 FROM (SELECT doc_id AS i FROM documents WHERE doc_id < 50)
@@ -5669,7 +5693,7 @@ def _q_table_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</body></html>"),
     )
     pages = docs.select(url_expr(i).alias("url"), html.alias("html"))
-    return table_rows(pages)
+    return table_rows(pages).withColumn("cells", _joined(F.col("cells")))
 
 
 def _sql_table_rows() -> str:
@@ -5691,7 +5715,9 @@ def _sql_table_rows() -> str:
       SELECT url, 1::BIGINT, 0::BIGINT, false, [lang]
       FROM base WHERE doc_id % 10 = 0
     )
-    SELECT * FROM hdr UNION ALL SELECT * FROM data UNION ALL SELECT * FROM langt
+    SELECT url, table_idx, row_idx, is_header, {_joined_sql("cells")} AS cells
+    FROM (SELECT * FROM hdr UNION ALL SELECT * FROM data
+          UNION ALL SELECT * FROM langt)
     """
 
 

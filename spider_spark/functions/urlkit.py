@@ -122,14 +122,6 @@ def canonicalize(raw: str) -> str:
     return str(CanonURL.parse(raw))
 
 
-def seed_canonicalize(raw: str) -> str:
-    return str(CanonURL.seed(raw))
-
-
-def seed_human_repr(raw: str) -> str:
-    return CanonURL.seed(raw).human_repr()
-
-
 def url_host(canon: str) -> str:
     return CanonURL.parse(canon).host
 

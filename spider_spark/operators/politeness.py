@@ -7,16 +7,27 @@ The north rule requires the real thing: a per-host budget per round with a
 priority queue, expressed as a ``row_number()`` window per host — pure JVM,
 no Python worker in the scheduler.
 
+**One tagger.** :func:`tag_frontier` tags every frontier row with a
+``__fate`` (``eligible`` / ``carry`` / ``blocked``) and drops none: the
+robots join flags ``blocked``; while any cap applies, a strict-BFS gate
+lets only the minimum-depth level of the unblocked rows compete; the
+per-group top-k and the optional global round cap (the same core with
+one group, tier first in the order) pick ``eligible``. A crawl round
+checkpoints the tagged frame once; :func:`schedule`,
+:func:`global_round_cap` and :func:`apply_robots` are filters over it.
+
 Scale design (hard item H4 — one hot host can hold ~50% of the frontier):
 a single window partitioned by host would funnel the hot host into one
-task. The scheduler therefore selects top-k-per-host in **two stages**:
+task. The top-k core therefore ranks in **two stages**, flagging rather
+than dropping:
 
-1. **salted stage** — partition by ``(host, pmod(xxhash64(url), salt))``
-   and keep at most ``k`` rows per salted partition (each one's local
-   top-k by the priority key). This bounds any partition to ``k`` rows
-   and spreads the hot host over ``salt`` tasks.
-2. **exact stage** — partition the ≤ ``salt × k`` survivors by host and
-   keep the true top-``k``.
+1. **salted stage** — partition by ``(group, pmod(xxhash64(url), salt),
+   candidate)``; a candidate survives when it is among its partition's
+   first ``k``. This spreads the hot host over ``salt`` tasks.
+2. **exact stage** — partition by ``(group, -1 if survivor else shard)``:
+   a group's ≤ ``salt × k`` survivors share one partition and are ranked
+   again, every other row stays in its shard's partition. No window
+   partition holds more than one shard of a group plus the survivors.
 
 Both stages order by the BFS priority key ``(depth, admission_rank)`` (the
 north rule's crawl-depth/priority score), ties broken by ``canon_url``, so
@@ -179,7 +190,10 @@ def _with_rules(frontier: DataFrame, rules: RobotsRules,
     otherwise) and ``__delay_cap`` (per-round fetch cap from crawl_delay;
     null = no cap). The rules side is tiny in practice → AQE broadcasts
     it; a huge robots table degrades to a host-keyed shuffle join, never
-    a driver collect."""
+    a driver collect. Provably empty rules skip the join: nothing is
+    blocked and no ``__delay_cap`` column is added."""
+    if rules.trivially_empty:
+        return frontier.withColumn("__blocked", F.lit(False))
     rules_df = rules.to_df(frontier.sparkSession)
     full_match = "rules" in rules_df.columns
     sel = [
@@ -213,15 +227,110 @@ def _with_rules(frontier: DataFrame, rules: RobotsRules,
 
 def apply_robots(frontier: DataFrame, rules: RobotsRules,
                  round_window_sec: float = 60.0) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (allowed, blocked) by disallow-prefix match.
-    ``allowed`` keeps a ``__delay_cap`` helper column consumed by
-    :func:`schedule` (dropped before rows leave the scheduler)."""
-    if rules.trivially_empty:
-        return frontier, frontier.limit(0)
+    """Split frontier into (allowed, blocked) by the robots verdict: two
+    filters over the tagger's robots stage. ``allowed`` keeps the
+    ``__delay_cap`` helper column when the rules carry delays."""
     flagged = _with_rules(frontier, rules, round_window_sec)
     allowed = flagged.filter(~F.col("__blocked")).drop("__blocked")
     denied = flagged.filter(F.col("__blocked")).drop("__blocked", "__delay_cap")
     return allowed, denied
+
+
+FATE = "__fate"
+ELIGIBLE, CARRY, BLOCKED = "eligible", "carry", "blocked"
+FATES = (ELIGIBLE, CARRY, BLOCKED)
+
+
+def _top_k(df: DataFrame, group: list, kk, order: list, salt: int,
+           pool) -> DataFrame:
+    """Flag ``__top`` on each group's first ``kk`` ``pool`` rows in
+    ``order`` (a NULL ``kk`` is no cap) and drop no row: the salted, then
+    exact ``row_number`` stages of the module docstring."""
+    shard = F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt))
+
+    def fits(*part):
+        w = Window.partitionBy(*group, *part).orderBy(*order)
+        return F.col("__kk").isNull() | (F.row_number().over(w) <= F.col("__kk"))
+
+    top = F.col("__top")
+    return (
+        df.withColumn("__kk", kk)
+        .withColumn("__top", pool & fits(shard, pool))
+        .withColumn("__top", top & fits(F.when(top, F.lit(-1)).otherwise(shard)))
+        .drop("__kk")
+    )
+
+
+def tag_frontier(
+    frontier: DataFrame, budget: int | None, rules: RobotsRules | None = None,
+    salt: int = 8, round_window_sec: float = 60.0, strict_bfs: bool = True,
+    waves: int = 1, host_budgets: DataFrame | None = None,
+    group_col: str = "host", round_cap: int | None = None,
+    tier_col: str | None = None,
+) -> DataFrame:
+    """The frontier's columns plus ``__fate``: ``blocked`` by robots,
+    ``eligible`` for this round, or ``carry`` to the next. The arguments
+    are :func:`schedule`'s plus the global round cap of
+    :func:`global_round_cap` (``round_cap``, ``tier_col``), which applies
+    after the per-group caps."""
+    if round_cap is not None and round_cap < 1:
+        raise ValueError(f"cap must be ≥1: {round_cap}")
+    cols = frontier.columns
+    df = _with_rules(frontier, rules or RobotsRules(), round_window_sec)
+    blocked = F.col("__blocked")
+    # with no cap every unblocked row is eligible: delay caps don't apply
+    # either (reference parity keeps robots exclusion but no rate maths)
+    per_group = budget is not None or host_budgets is not None
+    pool = ~blocked
+    if strict_bfs and (per_group or round_cap is not None):
+        # gate to the minimum-depth level: a 1-row aggregate joined back
+        # (broadcast) — no driver round-trip
+        lvl = df.filter(pool).agg(F.min("depth").alias("__lvl"))
+        df = df.crossJoin(F.broadcast(lvl))
+        pool = pool & (F.col("depth") == F.col("__lvl"))
+    df = df.withColumn("__pool", pool)
+    pool = F.col("__pool")
+    order = [F.col(c).asc() for c in PRIORITY_COLS] + [F.col("canon_url").asc()]
+
+    if per_group:
+        # per-group cap: least() skips NULLs, so a NULL cap means uncapped
+        waves = max(1, waves)
+        caps = [] if budget is None else [F.lit(budget * waves)]
+        if "__delay_cap" in df.columns:
+            # a batched round spans `waves` politeness windows → delay caps
+            # scale identically to the budget
+            delay_cap = F.col("__delay_cap") * waves
+            if group_col != "host":
+                # host-scoped robots caps folded to the group's strictest
+                # competing member (min ignores NULL = uncapped hosts)
+                delay_cap = F.min(delay_cap).over(
+                    Window.partitionBy(group_col, pool))
+            caps.append(delay_cap)
+        if host_budgets is not None:
+            hb = host_budgets.select(
+                F.lower(F.col(group_col)).alias(group_col),
+                (F.greatest(F.col("budget").cast("int"), F.lit(1))
+                 * waves).alias("__host_budget"),
+            )
+            df = df.join(F.broadcast(hb), on=group_col, how="left")
+            caps.append(F.col("__host_budget"))
+        kk = caps[0] if len(caps) == 1 else F.least(*caps)
+        df = _top_k(df, [group_col], kk, order, salt, pool)
+        pool = F.col("__top")
+    if round_cap is not None:
+        # one group: the whole pool, tier first in the order
+        tier = [F.col(tier_col).asc()] if tier_col else []
+        df = _top_k(df, [], F.lit(round_cap), tier + order, salt, pool)
+        pool = F.col("__top")
+    fate = F.when(blocked, BLOCKED).when(pool, ELIGIBLE).otherwise(CARRY)
+    return df.select(*cols, fate.alias(FATE))
+
+
+def split_fates(tagged: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(eligible, carryover, blocked)`` as filters over a tagged frontier."""
+    return tuple(
+        tagged.filter(F.col(FATE) == f).drop(FATE) for f in FATES
+    )
 
 
 def schedule(
@@ -235,7 +344,8 @@ def schedule(
     host_budgets: DataFrame | None = None,
     group_col: str = "host",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Return ``(eligible, carryover, blocked)`` for this round.
+    """Return ``(eligible, carryover, blocked)`` for this round: the three
+    fates of :func:`tag_frontier`, as filters over one tagged plan.
 
     ``budget=None`` (reference parity: the semaphore never actually limits,
     Q4) makes every allowed URL eligible. ``eligible ∪ carryover ∪ blocked``
@@ -273,65 +383,11 @@ def schedule(
     joins on ``group_col`` (key the table accordingly). The invariance
     argument is grouping-independent: caps reschedule, never drop.
     """
-    rules = rules or RobotsRules()
-    if rules.trivially_empty:
-        allowed, blocked_df = frontier, frontier.limit(0)
-    else:
-        allowed, blocked_df = apply_robots(frontier, rules, round_window_sec)
-    if budget is None and host_budgets is None:
-        # no budget: delay caps don't apply either (reference parity
-        # path keeps robots exclusion but no rate maths)
-        return allowed.drop("__delay_cap"), frontier.limit(0), blocked_df
-
-    if strict_bfs:
-        # gate to the minimum-depth level: a 1-row aggregate joined back
-        # (broadcast) — no driver round-trip, stays one Spark job
-        lvl = allowed.agg(F.min("depth").alias("__lvl"))
-        gated = (
-            allowed.join(F.broadcast(lvl), on=F.col("depth") == F.col("__lvl"))
-            .drop("__lvl")
-        )
-    else:
-        gated = allowed
-
-    # per-group cap: least() skips NULLs, so a NULL cap means uncapped
-    waves = max(1, waves)
-    caps = [] if budget is None else [F.lit(budget * waves)]
-    if "__delay_cap" in gated.columns:
-        # a batched round spans `waves` politeness windows → delay caps
-        # scale identically to the budget
-        delay_cap = F.col("__delay_cap") * waves
-        if group_col != "host":
-            # host-scoped robots caps folded to the group's strictest
-            # member (min ignores NULL = uncapped hosts)
-            delay_cap = F.min(delay_cap).over(Window.partitionBy(group_col))
-        caps.append(delay_cap)
-    if host_budgets is not None:
-        hb = host_budgets.select(
-            F.lower(F.col(group_col)).alias(group_col),
-            (F.greatest(F.col("budget").cast("int"), F.lit(1))
-             * waves).alias("__host_budget"),
-        )
-        gated = gated.join(F.broadcast(hb), on=group_col, how="left")
-        caps.append(F.col("__host_budget"))
-    kk = caps[0] if len(caps) == 1 else F.least(*caps)
-
-    order = [F.col(c).asc() for c in PRIORITY_COLS] + [F.col("canon_url").asc()]
-    shard = F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt))
-    keep = F.col("__kk").isNull() | (F.col("__r") <= F.col("__kk"))
-    eligible = gated.withColumn("__kk", kk)
-    for part in ([group_col, shard], [group_col]):  # salted, then exact
-        w = Window.partitionBy(*part).orderBy(*order)
-        eligible = (
-            eligible.withColumn("__r", F.row_number().over(w))
-            .filter(keep)
-            .drop("__r")
-        )
-    eligible = eligible.drop("__kk", "__delay_cap", "__host_budget")
-    carryover = allowed.drop("__delay_cap").join(
-        eligible.select("canon_url"), on="canon_url", how="left_anti"
-    )
-    return eligible, carryover, blocked_df
+    return split_fates(tag_frontier(
+        frontier, budget, rules, salt=salt, round_window_sec=round_window_sec,
+        strict_bfs=strict_bfs, waves=waves, host_budgets=host_budgets,
+        group_col=group_col,
+    ))
 
 
 def global_round_cap(eligible: DataFrame, cap: int,
@@ -343,58 +399,26 @@ def global_round_cap(eligible: DataFrame, cap: int,
     ``(tier, depth, admission_rank, canon_url)`` — the "tier crawl"
     semantic: when round capacity is bounded (executor memory, commit
     sizing), high-tier hosts' URLs claim it first and everything else
-    waits in carryover. Per-host politeness budgets stay enforced (this
-    runs AFTER :func:`schedule`); the URL-seen set is unchanged because
-    deferred rows drain through carryover exactly like budget carryover
-    does (the module's invariance argument applies verbatim under
-    ``strict_bfs`` — deferred rows keep their depth and re-compete at the
-    min-depth gate).
+    waits in carryover. These are the eligible and carry fates of
+    :func:`tag_frontier` with only the round cap set; a crawl round
+    applies the cap in its one tagger pass, after the per-host budgets.
+    Deferred rows drain through carryover like budget carryover, so the
+    module's invariance argument applies verbatim under ``strict_bfs``.
 
-    ``strict_bfs=True`` gates the pool to the frontier's minimum-depth
-    level BEFORE tiers rank it (non-min-depth rows go straight to
-    ``deferred``). This is load-bearing for the invariance theorem: the
-    tier key outranks depth by design (high-tier hosts claim capacity
-    first), so without the gate a budget-less capped crawl could fetch a
-    high-tier deep URL before a low-tier shallow one, stamp discoveries
-    at non-minimal depths, and shrink the seen set under a binding depth
-    bound. (When a per-host budget is set, :func:`schedule` has already
-    applied this gate and the join below finds every row at one depth —
-    a cheap no-op.) ``strict_bfs=False`` is max-throughput mode: pure
-    ``(tier, depth, admission)`` order across levels, same caveats as the
-    scheduler's non-strict mode.
+    ``strict_bfs=True`` gates the pool to the minimum-depth level BEFORE
+    tiers rank it (non-min-depth rows go straight to ``deferred``). This
+    is load-bearing for the invariance theorem: the tier key outranks
+    depth by design, so without the gate a budget-less capped crawl could
+    fetch a high-tier deep URL before a low-tier shallow one, stamp
+    discoveries at non-minimal depths, and shrink the seen set under a
+    binding depth bound. ``strict_bfs=False`` is max-throughput mode:
+    pure ``(tier, depth, admission)`` order across levels.
 
-    Exact top-``cap`` without a global sort: the same salted two-stage
-    ``row_number`` pattern as the stratified sampler — stage 1 ranks
-    within url-hash shards (no single task ever sorts more than one
-    shard), stage 2 ranks the ≤ ``salt × cap`` survivors. Deterministic:
-    ties break on ``canon_url``."""
-    if cap < 1:
-        raise ValueError(f"cap must be ≥1: {cap}")
-    pool = eligible
-    if strict_bfs:
-        lvl = eligible.agg(F.min("depth").alias("__lvl"))
-        pool = (
-            eligible.join(F.broadcast(lvl), on=F.col("depth") == F.col("__lvl"))
-            .drop("__lvl")
-        )
-
-    cols = ([tier_col] if tier_col else []) + PRIORITY_COLS
-    order = [F.col(c).asc() for c in cols] + [F.col("canon_url").asc()]
-    w1 = Window.partitionBy(
-        F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt))
-    ).orderBy(*order)
-    stage1 = (
-        pool.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= cap)
-        .drop("__r1")
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    kept = (
-        stage1.withColumn("__r2", F.row_number().over(w2))
-        .filter(F.col("__r2") <= cap)
-        .drop("__r2")
-    )
-    deferred = eligible.join(
-        kept.select("canon_url"), on="canon_url", how="left_anti"
-    )
+    Exact top-``cap`` without a global sort: the top-k core with a single
+    group — stage 1 ranks within url-hash shards, stage 2 ranks the ≤
+    ``salt × cap`` survivors. Deterministic: ties break on ``canon_url``."""
+    kept, deferred, _ = split_fates(tag_frontier(
+        eligible, None, salt=salt, strict_bfs=strict_bfs,
+        round_cap=cap, tier_col=tier_col,
+    ))
     return kept, deferred

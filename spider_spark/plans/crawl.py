@@ -29,8 +29,13 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
   (depth, parent_rank)-range buckets replace range partitioning's
   sampling job, so the explode → dedupe → seen-gate → rank chain is ONE
   job with one shuffle per round.
-* **lineage is cut every round** — either a durable TableIO snapshot commit
-  (atomic, resumable: E6 analog) or an eager ``localCheckpoint``.
+* **one schedule materialization** — the politeness tagger marks every
+  frontier row eligible / carry / blocked in one checkpoint whose job also
+  counts each fate; eligible and carryover are filters over it, and the
+  next frontier (admissions ∪ carryover) stays lazy over that checkpoint
+  and the ranking's. The no-politeness fast path skips the tagger.
+* **lineage is cut every round** — by those checkpoints, plus a durable
+  TableIO snapshot commit (atomic, resumable: E6 analog) when durable.
 * **counters** — reference counters (crawler.py:61-62,87-90) map to per
   round metrics rows: ``total_calls`` ≡ admitted URLs (the cache admits
   before the fetch, use_cache.py:22-24, so failures still count —
@@ -42,7 +47,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,9 +66,11 @@ from spider_spark.operators.shardstore import ShardedFilter, filter_unseen
 # less GC pressure, and the extra ser/deser CPU parallelizes with cores
 CHECKPOINT_LEVEL = StorageLevel.MEMORY_AND_DISK
 from spider_spark.operators.politeness import (
+    FATE,
+    FATES,
     RobotsRules,
-    global_round_cap,
-    schedule,
+    split_fates,
+    tag_frontier,
 )
 from spider_spark.operators.ranking import with_global_rank
 
@@ -78,6 +85,12 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("round_admitted", T.IntegerType(), False),
     ]
 )
+
+BLOOM_FPP = 0.01  # false-positive rate of the engine-owned seen bloom
+# durable mode: the seen set is kept in a catalog table bucketed by
+# canon_url, so the per-round anti-join shuffles only the candidate delta —
+# never the accumulated seen set (VERDICT r1 wrong-3)
+SEEN_BUCKETS = 32
 
 RESULTS_COLUMNS = [
     "url", "title", "parent", "content_ref", "depth", "crawl_round",
@@ -111,7 +124,6 @@ class CrawlConfig:
     use_bloom: bool = True          # engine-owned bloom seen filter (only
                                     # with use_cache; a caller's seen_filter
                                     # replaces it)
-    bloom_fpp: float = 0.01
     bloom_capacity: int = 1_000_000  # initial sizing HINT only: the filter
                                     # tracks the exact seen count and is
                                     # rebuilt 4× bigger from the seen table
@@ -155,11 +167,6 @@ class CrawlConfig:
                                     # global_round_cap)
     broadcast_threshold: int = 2_000_000  # frontier rows; above → SMJ fetch-join
     durable: bool = False           # checkpoint rounds via TableIO (resume)
-    seen_buckets: int = 32          # durable mode: the seen set is kept in a
-                                    # catalog table bucketed by canon_url, so
-                                    # the per-round anti-join shuffles only
-                                    # the candidate delta — never the
-                                    # accumulated seen set (VERDICT r1 wrong-3)
     max_rounds: int | None = None
     verify_text: bool = True        # enforce byte-identical text invariant
     vacuum_every: int | None = None  # durable mode: expire superseded
@@ -362,7 +369,7 @@ class CrawlEngine:
 
     def _seen_keys(self) -> DataFrame:
         return self.io.read_bucketed_keys(
-            "seen", "canon_url", self.config.seen_buckets
+            "seen", "canon_url", SEEN_BUCKETS
         )
 
     def _timed(self, phase: str, fn):
@@ -549,11 +556,10 @@ class CrawlEngine:
             self.io.commit_overwrite("seen", seen, bucket_by="canon_url",
                                      meta={"round": -1, "epoch": self._epoch})
 
-        r = 0
         # round-0 admissions metric counts THIS crawl's seeds (ranks may
         # start past zero when continuing a corpus via start_rank)
-        self._seed_count = n_seeds
-        state = _RoundState(frontier, seen, next_rank, r, frontier_count=n_seeds)
+        state = _RoundState(frontier, seen, next_rank, 0,
+                            frontier_count=n_seeds, seed_count=n_seeds)
         try:
             while True:
                 state, round_results, m = self._run_round(state)
@@ -610,7 +616,7 @@ class CrawlEngine:
         cfg = self.config
         if not (cfg.use_cache and cfg.use_bloom):
             return None
-        return ShardedBloom(cfg.bloom_capacity, cfg.bloom_fpp, cfg.bloom_shards,
+        return ShardedBloom(cfg.bloom_capacity, BLOOM_FPP, cfg.bloom_shards,
                             spill_dir=cfg.filter_spill_dir)
 
     def _run_round(self, state: "_RoundState"):
@@ -631,15 +637,8 @@ class CrawlEngine:
         if no_politeness:
             eligible = state.frontier  # already checkpointed by the caller
             carryover = state.frontier.limit(0)
-            n_eligible = (
-                state.frontier_count
-                if state.frontier_count >= 0
-                else state.frontier.count()
-            )
-            n_blocked = 0
+            n_eligible, n_carry, n_blocked = state.frontier_count, 0, 0
         else:
-            from pyspark.sql import Observation
-
             sched_in, group_col, host_budgets = (
                 state.frontier, "host", self._host_budgets
             )
@@ -647,66 +646,41 @@ class CrawlEngine:
                 # site-level grouping: map this round's hosts (a bounded,
                 # host-keyed relation — never the frontier itself) to
                 # their registrable domain and rate-limit per site
-                from spider_spark.functions.domains import (
-                    registrable_domains,
-                )
+                from spider_spark.functions.domains import registrable_domains
 
-                site_map = registrable_domains(
-                    state.frontier.select("host")
-                ).select(
-                    "host",
-                    F.coalesce("registrable", "host").alias("__site"),
-                )
-                sched_in = state.frontier.join(
-                    site_map, on="host", how="left"
-                ).withColumn(
-                    "__site", F.coalesce(F.col("__site"), F.col("host"))
-                )
+                site_map = registrable_domains(state.frontier.select("host")) \
+                    .select("host", F.coalesce("registrable", "host").alias("__site"))
+                sched_in = state.frontier.join(site_map, on="host", how="left") \
+                    .withColumn("__site", F.coalesce(F.col("__site"), F.col("host")))
                 group_col = "__site"
                 if host_budgets is not None:
-                    host_budgets = host_budgets.withColumnRenamed(
-                        "host", "__site"
-                    )
-            eligible, carryover, blocked = schedule(
+                    host_budgets = host_budgets.withColumnRenamed("host", "__site")
+            tier_col = None
+            if cfg.max_fetch_per_round is not None and self._host_tiers is not None:
+                # tiered global round capacity (after per-host budgets):
+                # top-N by (tier, depth, admission); unlisted hosts last
+                sched_in = sched_in.join(
+                    F.broadcast(self._host_tiers), on="host", how="left"
+                ).withColumn(
+                    "__tier", F.coalesce(F.col("__tier"), F.lit(2147483647))
+                )
+                tier_col = "__tier"
+            tagged = tag_frontier(
                 sched_in, cfg.budget, self.rules, salt=cfg.salt,
                 strict_bfs=cfg.strict_bfs, waves=cfg.waves,
                 host_budgets=host_budgets, group_col=group_col,
-            )
-            if cfg.politeness_site:
-                eligible = eligible.drop("__site")
-                carryover = carryover.drop("__site")
-                blocked = blocked.drop("__site")
-            if cfg.max_fetch_per_round is not None:
-                # tiered global round capacity (after per-host budgets):
-                # top-N by (tier, depth, admission); the rest defer into
-                # carryover and re-compete next round at the min-depth gate
-                tier_col = None
-                if self._host_tiers is not None:
-                    eligible = eligible.join(
-                        F.broadcast(self._host_tiers), on="host", how="left"
-                    ).withColumn(
-                        "__tier",
-                        F.coalesce(F.col("__tier"), F.lit(2147483647)),
-                    )
-                    tier_col = "__tier"
-                kept, deferred = global_round_cap(
-                    eligible, cfg.max_fetch_per_round,
-                    tier_col=tier_col, salt=cfg.salt,
-                    strict_bfs=cfg.strict_bfs,
-                )
-                eligible = kept.drop("__tier")
-                carryover = carryover.unionByName(deferred.drop("__tier"))
-            # count rides the checkpoint job via observe(): no extra job
-            el_obs = Observation()
-            eligible = eligible.observe(
-                el_obs, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
-            n_eligible = el_obs.get["n"]
-            # blocked is derived from set arithmetic at round end
-            # (frontier_in = eligible + carryover + blocked) when the
-            # incoming frontier count is known exactly — the only
-            # blocked.count() job left is the unknown-count resume edge
-            n_blocked = -1 if state.frontier_count >= 0 else blocked.count()
+                round_cap=cfg.max_fetch_per_round, tier_col=tier_col,
+            ).select(*state.frontier.columns, FATE)
+            # the round's one scheduling materialization: every frontier
+            # row tagged once, the fate counts riding the job via
+            # observe(); eligible and carryover are filters over it
+            fate_obs = Observation()
+            tagged = self._timed("schedule", lambda: tagged.observe(
+                fate_obs,
+                *(F.count(F.when(F.col(FATE) == f, 1)).alias(f) for f in FATES),
+            ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL))
+            n_eligible, n_carry, n_blocked = (fate_obs.get[f] for f in FATES)
+            eligible, carryover, _ = split_fates(tagged)
 
         # ---- fetch-join (S2): frontier ⋈ pages; miss ≡ failed download ----
         pages_cols = self.pages.select(
@@ -745,8 +719,6 @@ class CrawlEngine:
         # count — and, when enabled, the byte-identical-text invariant —
         # ride the same job as observe() metrics (A2's df.observe mapping):
         # no separate count job, no extra verification pass.
-        from pyspark.sql import Observation
-
         obs = Observation()
         obs_exprs = [F.count(F.lit(1)).alias("n_fetched")]
         if cfg.verify_text:
@@ -1001,36 +973,21 @@ class CrawlEngine:
                 self.seen_filter = self._timed("bloom", lambda: filt.admit(
                     None if collector else ranked, n_new, seen
                 ))
-            if no_politeness:
-                frontier = admitted  # carryover statically empty
-            else:
-                frontier = admitted.unionByName(carryover)
+            # the next frontier stays lazy: both parts are filters or
+            # projections over this round's checkpoints
+            frontier = (admitted if no_politeness
+                        else admitted.unionByName(carryover))
         else:
             seen = state.seen
             frontier = carryover
 
-        if no_politeness:
-            n_carry = 0
-        else:
-            # the next-frontier count rides its checkpoint job via observe()
-            from pyspark.sql import Observation
-
-            fr_obs = Observation()
-            frontier = frontier.observe(
-                fr_obs, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
-            n_carry = fr_obs.get["n"] - n_new
-        if n_blocked < 0:
-            # set arithmetic: frontier_in = eligible + carryover + blocked
-            n_blocked = state.frontier_count - n_eligible - n_carry
         # admitted: URLs newly entered into the seen set this round — the
         # cache admits before the fetch (use_cache.py:22-24), so failures
         # and carryover never re-count (crawler.py:98 fires once per URL).
         # Round 0 additionally accounts for the seeds admitted at bootstrap.
         m = RoundMetrics(
             round=r,
-            admitted=(getattr(self, "_seed_count", state.next_rank) if r == 0 else 0)
-            + n_new,
+            admitted=state.seed_count + n_new,
             fetched=n_fetched,
             new_links=n_new,
             carryover=n_carry,
@@ -1179,5 +1136,7 @@ class _RoundState:
     seen: DataFrame
     next_rank: int
     round: int
-    frontier_count: int = -1
+    frontier_count: int                  # exact row count of ``frontier``
+    seed_count: int = 0                  # bootstrap seeds this round's
+                                         # ``admitted`` metric counts
     seen_delta: DataFrame | None = None  # this round's admissions (3 seen cols)

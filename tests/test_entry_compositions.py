@@ -227,3 +227,25 @@ class TestDriverWindow:
         msg = str(ei.value)
         assert "no_such_query" in msg and "also_missing" in msg
         assert "crawl_results" not in msg
+
+
+class TestJoinedLists:
+    def test_engines_render_lists_alike(self, spark):
+        """List outputs joined into one string read the same on Spark and
+        DuckDB: NULL elements skipped, an empty list '', a NULL list NULL."""
+        import duckdb
+
+        lists = [["a", None, "b"], [], [None], None, ["only"]]
+        df = spark.createDataFrame([(i, v) for i, v in enumerate(lists)],
+                                   "i int, l array<string>")
+        got = {r["i"]: r["s"] for r in
+               df.select("i", entry._joined(F.col("l")).alias("s")).collect()}
+        con = duckdb.connect()
+        want = {
+            i: con.execute(
+                f"SELECT {entry._joined_sql('l')} FROM (SELECT ?::VARCHAR[] AS l)",
+                [v],
+            ).fetchone()[0]
+            for i, v in enumerate(lists)
+        }
+        assert got == want == {0: "a\x1eb", 1: "", 2: "", 3: None, 4: "only"}

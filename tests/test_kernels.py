@@ -12,8 +12,6 @@ from spider_spark.functions.urlkit import (
     canonicalize,
     content_ref,
     generate_refs,
-    seed_canonicalize,
-    seed_human_repr,
     url_host,
 )
 
@@ -22,13 +20,14 @@ class TestURLKit:
     def test_str_vs_human_repr(self):
         # test_db_ops_controller.py:144-148: key 'https://example.com',
         # parent 'https://example.com/'
-        assert seed_canonicalize("https://example.com") == "https://example.com"
-        assert seed_human_repr("https://example.com") == "https://example.com/"
+        seed = CanonURL.seed("https://example.com")
+        assert str(seed) == "https://example.com"
+        assert seed.human_repr() == "https://example.com/"
 
     def test_seed_scheme_default(self):
         # crawler.py:51-52
-        assert seed_canonicalize("example.com") == "https://example.com"
-        assert seed_canonicalize("http://example.com") == "http://example.com"
+        assert str(CanonURL.seed("example.com")) == "https://example.com"
+        assert str(CanonURL.seed("http://example.com")) == "http://example.com"
 
     def test_host_and_port_normalization(self):
         assert url_host("https://EXAMPLE.com/Page") == "example.com"

@@ -518,3 +518,37 @@ class TestScheduleExactness:
         assert sorted(r["canon_url"] for r in eligible.collect()) == [
             "https://t.example/a", "https://t.example/b"
         ]
+
+
+class TestBudgetedRoundJobs:
+    """Jobs per budgeted round, pinned together with the round metrics
+    they must not change: the scheduler tags each frontier row in one
+    materialization and the next frontier stays lazy. This crawl ran 81
+    jobs over 4 rounds on a 4-core host (128 when the eligible set and
+    the next frontier were checkpointed separately)."""
+
+    def test_jobs_per_round_and_metrics(self, spark):
+        pages = synthetic_pages(spark, 3000).localCheckpoint(eager=True)
+        robots = spark.createDataFrame(
+            [("h0.example", ["/d/2"], 0.0), ("h6.example", ["/d/"], 0.0),
+             ("h10.example", [], 20.0)],
+            "host string, disallow_prefixes array<string>, crawl_delay double",
+        )
+        eng = CrawlEngine(
+            spark, pages, CrawlConfig(depth=1, budget=5, verify_text=False),
+            robots=robots,
+        )
+        sc, group = spark.sparkContext, "budgeted-round-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            res = eng.crawl([f"https://h0.example/d/{i}" for i in range(0, 16, 2)])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        got = [(m.round, m.admitted, m.fetched, m.new_links, m.carryover,
+                m.blocked) for m in res.metrics]
+        # blocked seed + links, budget carryover, dead links fetched as
+        # misses (round 3), a crawl-delay cap
+        assert got == [(0, 21, 5, 13, 2, 1), (1, 6, 2, 6, 11, 2),
+                       (2, 0, 10, 0, 2, 0), (3, 0, 0, 0, 0, 0)]
+        assert n_jobs / len(got) <= 24, f"{n_jobs} jobs over {len(got)} rounds"
