@@ -203,8 +203,8 @@ def _oracle_crawl_base(depth: int = CRAWL_DEPTH, seed_id: int = CRAWL_SEED_ID) -
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full frontier crawl (fetch-join → Arrow parse → explode →
-    bloom+anti-join dedupe → BFS rounds) at sf0.001; returns the results
-    table (url, title, parent, content_ref, depth, crawl_round,
+    min-depth dedupe + seen anti-join → BFS rounds) at sf0.001; returns the
+    results table (url, title, parent, content_ref, depth, crawl_round,
     admission_rank, fetched)."""
     return _crawl(spark, "/root/testdata/sf0.001").results
 

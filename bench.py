@@ -194,7 +194,6 @@ def frontier_crawls(spark, pages, n_pages: int, n_seeds: int, depth: int,
         url_expr(F.col("id")).alias("url")
     )
     config = CrawlConfig(depth=depth, verify_text=False,
-                         bloom_capacity=2 * n_pages,
                          broadcast_threshold=100_000, **knobs)
     records = []
     for _ in range(runs):

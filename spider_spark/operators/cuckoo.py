@@ -1,7 +1,6 @@
 """Partitioned (sharded) cuckoo-filter seen-set with DELETE support.
 
-The bloom prefilter (:mod:`.bloom`) is the crawl's default seen-set
-accelerator, but a bloom filter cannot forget: once a URL's bits are set
+A bloom prefilter (:mod:`.bloom`) cannot forget: once a URL's bits are set
 they stay set, so a *continuous* crawl that re-admits stale URLs
 (:mod:`.recrawl`) would have to rebuild the whole filter every expiry
 wave. A cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better
@@ -25,13 +24,12 @@ A on (bucket, fingerprint) — probability ≈ fpp per key — which here only
 means B gets re-fetched once; it can never corrupt the exact seen table.
 
 **Distribution.** Unlike bloom bit arrays, cuckoo tables are NOT
-OR-mergeable — a crawl round's admissions cannot ride the ranking pass
-and cost one keyed add job. Adds and deletes repartition keys BY SHARD
-and rewrite each shard's whole table inside the task that owns it
-(``mapInPandas``; a task may own several shards, a shard never spans
-tasks). Driver traffic is one table per shard — same order as the bloom
-partials. Inserts are bulk-vectorized: a numpy pass places all items with
-a free primary slot, a second pass tries alternate buckets, and only the
+OR-mergeable, so adds and deletes repartition keys BY SHARD and rewrite
+each shard's whole table inside the task that owns it (``mapInPandas``;
+a task may own several shards, a shard never spans tasks). Driver
+traffic is one table per shard — same order as the bloom partials.
+Inserts are bulk-vectorized: a numpy pass places all items with a free
+primary slot, a second pass tries alternate buckets, and only the
 residue (both buckets full) walks the classic kick chain.
 """
 

@@ -49,7 +49,6 @@ def with_global_rank(
     start: int = 0,
     num_partitions: int | None = None,
     with_count: bool = False,
-    stats_collector=None,
     bucket_expr: Column | None = None,
 ) -> DataFrame:
     """Add a dense 0-based global rank column ordered by ``order_cols``
@@ -61,17 +60,7 @@ def with_global_rank(
     ``bucket_expr`` (optional) switches to bucket mode: an integer Column,
     monotone non-decreasing in the ``order_cols`` tuple, of small
     cardinality (≲ thousands — its distinct values are collected to the
-    driver). Skips range partitioning's sampling job entirely.
-
-    ``stats_collector`` (optional) replaces the built-in per-group stats
-    collect: it receives the materialized DataFrame — stamped with
-    ``__rkey`` (the stats group: partition id in range mode, bucket value
-    in bucket mode) and ``__mid`` — and must return rows/dicts with
-    ``__rkey``/``cnt``/``min_mid``/``max_mid``. Callers use it to
-    piggyback OTHER per-partition reductions (e.g. the crawl's
-    bloom-shard fill, bloom.ShardedBloom.fill_collector) onto the stats
-    pass — one driver job instead of two, with no groupBy shuffle (the
-    combined pass is mapInPandas over the checkpoint)."""
+    driver). Skips range partitioning's sampling job entirely."""
     sc = df.sparkSession.sparkContext
     parts = num_partitions or sc.defaultParallelism
     # One materialization: partition + sort once, stamp each row with the
@@ -97,14 +86,13 @@ def with_global_rank(
             .withColumn("__mid", F.monotonically_increasing_id())
             .localCheckpoint(eager=True)
         )
-    if stats_collector is not None:
-        stats = stats_collector(parted)
-    else:
-        stats = parted.groupBy("__rkey").agg(
-            F.count("*").alias("cnt"),
-            F.min("__mid").alias("min_mid"),
-            F.max("__mid").alias("max_mid"),
-        ).collect()
+    # per-group stats: ``__rkey`` is the partition id in range mode, the
+    # bucket value in bucket mode
+    stats = parted.groupBy("__rkey").agg(
+        F.count("*").alias("cnt"),
+        F.min("__mid").alias("min_mid"),
+        F.max("__mid").alias("max_mid"),
+    ).collect()
     # Guard the layout assumptions — admission_rank feeds the crawl's
     # determinism contract, so fail loudly instead of silently mis-ranking:
     # * every group must be one contiguous id run (max - min == cnt - 1).

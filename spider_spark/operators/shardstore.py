@@ -1,27 +1,27 @@
 """The sharded seen-filter contract and its executor-visible shard storage.
 
-Both seen-set prefilters — the engine-owned bloom (:mod:`.bloom`) and the
-caller-owned deletable cuckoo (:mod:`.cuckoo`) — are one mechanism with two
-kernels (SURVEY D1/H3): the key space is split by ``xxhash64(key,
-SHARD_SALT) % n_shards``, each shard is an independent bit/slot array, and
-a probe only *prefilters* — :func:`filter_unseen` confirms every
-maybe-seen candidate with an exact anti-join, so false positives never
-drop a URL. :class:`ShardedFilter` holds what the two share:
+Both seen-set prefilters — the bloom (:mod:`.bloom`) and the deletable
+cuckoo (:mod:`.cuckoo`) — are one mechanism with two kernels (SURVEY
+D1/H3): the key space is split by ``xxhash64(key, SHARD_SALT) %
+n_shards``, each shard is an independent bit/slot array, and a probe only
+*prefilters* — :func:`filter_unseen` confirms every maybe-seen candidate
+with an exact anti-join, so false positives never drop a URL.
+:class:`ShardedFilter` holds what the two share:
 
 * the shard layout and where shards live — on the driver (one broadcast
   per shard at probe time, bounded by ``max_driver_bytes``) or as
   versioned files in a :class:`ShardStore` (spill mode);
-* the lifecycle the crawl drives: ``probe`` → ``admit`` (add, or grow by
-  :meth:`ShardedFilter.rebuild` past capacity) → ``release``;
+* the lifecycle the crawl drives for a caller-owned ``seen_filter``:
+  ``probe`` → ``admit`` (add, or grow by :meth:`ShardedFilter.rebuild`
+  past capacity) → ``release``;
 * the growth rule (:meth:`ShardedFilter.grown_capacity`): a filter whose
   exact running count ``n_items`` would pass its sized-for ``expected``
   is rebuilt from the seen table at 4× the new count — amortized O(1)
   rebuilds per key, fpp stays near nominal (tests/test_properties.py).
 
 A kernel class supplies sizing, the hash columns and the executor-side
-``add``; the bloom adds an optional ``fill_collector`` (its bit arrays
-OR-merge, so a round's fill can ride the ranking stats pass) and the
-cuckoo adds deletion. Jobs are launched only by the kernel modules.
+``add``; the cuckoo adds deletion. Jobs are launched only by the kernel
+modules.
 
 **Spill mode.** In-memory filters hold every shard on the driver: at
 10^10 URLs that is ~12 GB (1%-fpp bloom) or ~21 GB (16-bit cuckoo) at
@@ -201,12 +201,6 @@ class ShardedFilter:
             F.xxhash64(F.col(col), F.lit(SHARD_SALT)), F.lit(self.n_shards)
         ).cast("int").alias("__shard")
 
-    def fill_collector(self, col: str):
-        """Optional capability: a ``stats_collector`` for
-        :func:`.ranking.with_global_rank` that also adds the ranked rows'
-        ``col`` keys. None = the filter needs its own ``add`` job."""
-        return None
-
     # -- lifecycle ---------------------------------------------------------
 
     def probe(self, col: str, sc):
@@ -256,19 +250,18 @@ class ShardedFilter:
         n = self.n_items + n_new
         return 4 * n if n > self.expected else None
 
-    def admit(self, keys: DataFrame | None, n_new: int, source: DataFrame,
+    def admit(self, keys: DataFrame, n_new: int, source: DataFrame,
               col: str = "canon_url") -> "ShardedFilter":
-        """Account for ``n_new`` newly seen keys; returns the live filter.
-        Past capacity the filter is rebuilt from ``source`` (the whole seen
-        table, already holding the new keys) — before any add, since a
-        cuckoo batch past its design load can physically overflow;
-        otherwise ``keys`` are added (None: a ``fill_collector`` already
-        did) and superseded shard files are dropped."""
+        """Account for the ``n_new`` newly seen ``keys``; returns the live
+        filter. Past capacity the filter is rebuilt from ``source`` (the
+        whole seen table, already holding the new keys) — before any add,
+        since a cuckoo batch past its design load can physically overflow;
+        otherwise ``keys`` are added and superseded shard files are
+        dropped."""
         cap = self.grown_capacity(n_new)
         if cap is not None:
             return self.rebuild(source, cap, col)
-        if keys is not None:
-            self.add(keys, col)
+        self.add(keys, col)
         self.n_items += n_new
         self.gc_spill()
         return self

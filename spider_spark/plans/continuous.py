@@ -14,10 +14,10 @@ This module composes the engine's parts into that loop:
   cuckoo over bloom: a bloom filter would need a full seen-table rebuild
   every wave (O(corpus) scans at 10^10 URLs), the cuckoo pays O(wave).
   Deletion is the only step this module adds: within a wave the engine
-  drives the cuckoo through the same sharded-filter lifecycle as its own
-  bloom (admit the seeds, probe and admit every round, grow by a rebuild
-  from the seen table — operators/shardstore.py), and :meth:`attach`
-  rebuilds it through that same path;
+  drives the cuckoo as a caller-owned ``seen_filter`` through the one
+  sharded-filter lifecycle (admit the seeds, probe and admit every round,
+  grow by a rebuild from the seen table — operators/shardstore.py), and
+  :meth:`attach` rebuilds it through that same path;
 * :meth:`CrawlEngine.crawl` runs the wave with ``prior_seen`` +
   ``start_rank``, so admission ranks keep counting monotonically across
   the corpus lifetime (a refetch is a new admission) and the wave's link

@@ -13,7 +13,7 @@ driver-side loop of DataFrame jobs, one **round** per BFS level:
        │                         │
        │              min-depth intra-round dedupe (Q2 pinned: BFS)
        │                         │
-       │           seen-filter prefilter + exact anti-join vs seen  (D1/H3)
+       │                exact left_anti join vs seen  (D1/H3)
        │                         │
        └──────── union ◀── rank admissions (depth, parent_rank, link_pos)
 
@@ -28,7 +28,17 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
   in :mod:`spider_spark.operators.ranking`, in bucket mode: arithmetic
   (depth, parent_rank)-range buckets replace range partitioning's
   sampling job, so the explode → dedupe → seen-gate → rank chain is ONE
-  job with one shuffle per round.
+  job per round.
+* **the seen gate is the exact anti-join, no prefilter** — the min-depth
+  dedupe already hash-partitions the candidates by ``canon_url``, so the
+  ``left_anti`` join against the seen set adds no exchange on the
+  candidate side and shuffles only the seen side (durable mode reads that
+  side in place from the bucketed mirror and exchanges the candidates into
+  its layout instead). A bloom prefilter ahead of it would save no shuffle
+  here and cost a Python probe pass, an eager checkpoint, a broadcast and
+  a fill every round. A caller-owned filter (``seen_filter=``, e.g. the
+  continuous crawl's deletable cuckoo) still prefilters through
+  :func:`~spider_spark.operators.shardstore.filter_unseen`.
 * **one schedule materialization** — the politeness tagger marks every
   frontier row eligible / carry / blocked in one checkpoint whose job also
   counts each fate; eligible and carryover are filters over it, and the
@@ -59,7 +69,6 @@ from spider_spark.functions.urlkit import (
 )
 from pyspark.storagelevel import StorageLevel
 
-from spider_spark.operators.bloom import ShardedBloom
 from spider_spark.operators.shardstore import ShardedFilter, filter_unseen
 
 # serialized checkpoint storage: ~5× smaller than deserialized rows, far
@@ -86,7 +95,6 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-BLOOM_FPP = 0.01  # false-positive rate of the engine-owned seen bloom
 # durable mode: the seen set is kept in a catalog table bucketed by
 # canon_url, so the per-round anti-join shuffles only the candidate delta —
 # never the accumulated seen set (VERDICT r1 wrong-3)
@@ -121,28 +129,11 @@ class CrawlConfig:
                                     # Python boundary nor the link pipeline;
                                     # False = reference parity (BeautifulSoup
                                     # over every payload, crawler.py:140)
-    use_bloom: bool = True          # engine-owned bloom seen filter (only
-                                    # with use_cache; a caller's seen_filter
-                                    # replaces it)
-    bloom_capacity: int = 1_000_000  # initial sizing HINT only: the filter
-                                    # tracks the exact seen count and is
-                                    # rebuilt 4× bigger from the seen table
-                                    # whenever the count outgrows capacity
-                                    # (shardstore.ShardedFilter.admit)
-    bloom_shards: int = 1           # 10^10 path: shard by url-hash so each
-                                    # executor task pulls only the broadcast
-                                    # shards its rows touch (shardstore.py)
-    filter_spill_dir: str | None = None  # 10^10 path, part 2: seen-filter
-                                    # shards live as versioned files on a
-                                    # shared filesystem (built/mutated/probed
-                                    # executor-side); the driver holds only
-                                    # paths — without this an in-memory
-                                    # filter puts the WHOLE aggregate on the
-                                    # driver at every build/grow (~12 GB
-                                    # bloom / ~21 GB cuckoo at 10^10 URLs)
-                                    # and fails loudly past 4 GiB
-                                    # (shardstore.py)
-    salt: int = 8                   # politeness salting factor (H4)
+    bloom_capacity: int = 1_000_000  # read by nothing in the engine: the
+                                    # crawl keeps no filter of its own (a
+                                    # caller's seen_filter is sized by its
+                                    # owner); kept so existing configs that
+                                    # set it still construct
     politeness_site: bool = False   # budget per registrable domain (PSL
                                     # eTLD+1, functions/domains.py) instead
                                     # of per raw host: subdomain farms share
@@ -267,23 +258,18 @@ class CrawlEngine:
         self.io = io
         self.rules = RobotsRules.from_df(robots, now=robots_now, ttl_sec=robots_ttl_sec)
         self.phase_times: dict[str, float] = {}  # cumulative sec per phase
-        # the live seen filter (shardstore.ShardedFilter), driven through
-        # one bootstrap → probe → admit/grow → release path. A caller-owned
-        # one (the continuous crawl's deletable cuckoo) must already hold
+        # an optional caller-owned seen filter (shardstore.ShardedFilter,
+        # e.g. the continuous crawl's deletable cuckoo), driven through one
+        # admit → probe → admit/grow → release path. It must already hold
         # exactly prior_seen's keys; the engine admits this crawl's keys
         # and may replace it on growth — read it back here after crawl().
-        # Without one, each crawl builds its own bloom (cfg.use_bloom).
-        # The gate decides: use_cache=False keeps no filter at all.
-        # Deletability's price: cuckoo tables don't OR-merge, so their
-        # per-round admissions cost one keyed add job where the bloom's
-        # fill rides the ranking stats pass (fill_collector).
+        # Without one the seen gate is the plain exact anti-join.
         if seen_filter is not None and not self.config.use_cache:
             raise ValueError(
                 "seen_filter needs use_cache=True: with the seen gate off "
                 "the filter would miss this crawl's admissions"
             )
         self.seen_filter = seen_filter
-        self._owns_filter = seen_filter is None
         # ingest-time content dedup hook (continuous-crawl near-dup gate):
         # called once per round with this round's fetched pages as a
         # ``(canon_url, text)`` DataFrame; returns the ``canon_url``s whose
@@ -523,23 +509,16 @@ class CrawlEngine:
                     "canon_url", "depth", "admission_rank"
                 ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL),
             )
-        keys, n_keys = seen, n_seeds
+        keys = seen
         if prior_seen is not None:
             seen = prior_seen.select(
                 "canon_url", "depth", "admission_rank"
             ).unionByName(seen)
-        filt = self._fresh_filter()
-        if filt is not None:
-            # a caller's filter holds prior_seen already and admits the
-            # seeds (a recrawl wave's due URLs re-enter here); a fresh one
-            # admits the whole initial seen set. Either may grow, rebuilt
-            # from the full seen set.
-            if self._owns_filter:
-                keys, n_keys = seen, n_seeds + (
-                    prior_seen.count() if prior_seen is not None else 0
-                )
-            filt = filt.admit(keys, n_keys, seen)
-        self.seen_filter = filt
+        if self.seen_filter is not None:
+            # the caller's filter holds prior_seen already and admits the
+            # seeds (a recrawl wave's due URLs re-enter here); it may grow,
+            # rebuilt from the full seen set
+            self.seen_filter = self.seen_filter.admit(keys, n_seeds, seen)
         next_rank = start_rank + n_seeds
         results_parts: list[DataFrame] = []
         metrics: list[RoundMetrics] = []
@@ -605,20 +584,6 @@ class CrawlEngine:
 
     # -- internals -------------------------------------------------------------
 
-    def _fresh_filter(self) -> ShardedFilter | None:
-        """The filter a crawl or resume starts from: the caller's, or a new
-        engine-owned bloom (the previous crawl's is released) — none when
-        the seen gate or the bloom is off."""
-        if not self._owns_filter:
-            return self.seen_filter
-        if self.seen_filter is not None:
-            self.seen_filter.release()
-        cfg = self.config
-        if not (cfg.use_cache and cfg.use_bloom):
-            return None
-        return ShardedBloom(cfg.bloom_capacity, BLOOM_FPP, cfg.bloom_shards,
-                            spill_dir=cfg.filter_spill_dir)
-
     def _run_round(self, state: "_RoundState"):
         t0 = time.perf_counter()
         cfg = self.config
@@ -666,7 +631,7 @@ class CrawlEngine:
                 )
                 tier_col = "__tier"
             tagged = tag_frontier(
-                sched_in, cfg.budget, self.rules, salt=cfg.salt,
+                sched_in, cfg.budget, self.rules,
                 strict_bfs=cfg.strict_bfs, waves=cfg.waves,
                 host_budgets=host_budgets, group_col=group_col,
                 round_cap=cfg.max_fetch_per_round, tier_col=tier_col,
@@ -867,13 +832,14 @@ class CrawlEngine:
 
             candidates = self._timed("trap_guard", _guard)
 
-        # ---- seen-set gate (D1/H3): filter prefilter + exact anti-join ----
+        # ---- seen-set gate (D1/H3): exact anti-join ----
         # The gate's output feeds the bucket-mode ranking below, which
         # evaluates its input exactly ONCE (hash shuffle on arithmetic
         # buckets — no range-sampling pass), so everything here stays LAZY
-        # except the filter probe (a Python stage consumed by two branches).
-        # The whole explode → min-dedupe → seen-gate → rank chain
-        # materializes in a single job inside with_global_rank.
+        # and the whole explode → min-dedupe → seen-gate → rank chain
+        # materializes in a single job inside with_global_rank. Only a
+        # caller-owned filter adds a pass: its probe (a Python stage read
+        # by two branches) is checkpointed first.
         filt = self.seen_filter
 
         def _dedupe():
@@ -890,8 +856,8 @@ class CrawlEngine:
                         carryover.select("canon_url"), on="canon_url", how="left_anti"
                     )
                 return cand
-            # durable mode: confirm suspects against the bucketed seen key
-            # mirror — the exchange lands only on the candidate delta, the
+            # durable mode: anti-join against the bucketed seen key mirror —
+            # the exchange lands only on the candidate delta, the
             # accumulated seen scan stays in its bucket layout. The mirror
             # syncs O(delta) from the manifest (committed through round r-1
             # = exactly the membership this round must gate against).
@@ -899,32 +865,25 @@ class CrawlEngine:
             ckpt = lambda df: df.localCheckpoint(  # noqa: E731
                 eager=True, storageLevel=CHECKPOINT_LEVEL
             )
-            # with a filter: ONE materialization pass — the flagged
-            # candidates (explode + min-dedupe + probe in one job). Both
-            # branches are JVM filters over that checkpoint; the suspects'
-            # confirming anti-join folds into the ranking job
-            # (materialize_confirmed off — bucket mode reads the union
-            # exactly once). Without one: a single anti-join over the full
-            # candidate set, folded into the ranking job.
+            # without a filter: one anti-join over the full candidate set,
+            # folded into the ranking job. With one: one materialization
+            # pass — the flagged candidates (explode + min-dedupe + probe in
+            # one job); both branches are JVM filters over that checkpoint
+            # and the suspects' confirming anti-join folds into the ranking
+            # job (materialize_confirmed off — bucket mode reads the union
+            # exactly once).
             return filter_unseen(
                 candidates, "canon_url", seen_side, filt, materialize=ckpt,
                 materialize_confirmed=False,
             )
 
         new = self._timed("dedupe", _dedupe)
-        collector = None
         if filt is not None:
             # the probe stage is materialized inside _dedupe (the flagged
             # checkpoint — the only consumer of the shard broadcasts), so
             # this round's broadcasts are dead weight now — destroy them
             # before they accumulate across rounds
             filt.destroy_broadcasts()
-            # ONE driver job closes the round's bookkeeping: the ranking
-            # stats pass doubles as the n_new count AND, for a filter that
-            # offers it (the bloom), the shard fill — mapInPandas over the
-            # ranking checkpoint, no groupBy shuffle, no separate fill job
-            # (VERDICT r2 next-3)
-            collector = filt.fill_collector("canon_url")
         # arithmetic rank buckets: the order key's prefix (depth,
         # parent_rank) is dense — depth is a small bounded int, parent_rank
         # ∈ [0, next_rank) — so equal-width parent_rank ranges stratified
@@ -941,8 +900,7 @@ class CrawlEngine:
             "rank",
             lambda: with_global_rank(
                 new, ["depth", "parent_rank", "link_pos"], "admission_rank",
-                start=state.next_rank, with_count=True,
-                stats_collector=collector, bucket_expr=bucket,
+                start=state.next_rank, with_count=True, bucket_expr=bucket,
             ),
         )
         if n_new:
@@ -966,13 +924,12 @@ class CrawlEngine:
                 admitted.select("canon_url", "depth", "admission_rank")
             )
             if filt is not None:
-                # admit the round's keys — already added when the fill rode
-                # the ranking stats pass — or grow, rebuilt from the seen
+                # add the round's keys, or grow, rebuilt from the seen
                 # table that now holds them (the probes that read the
                 # superseded shard files ran inside _dedupe)
-                self.seen_filter = self._timed("bloom", lambda: filt.admit(
-                    None if collector else ranked, n_new, seen
-                ))
+                self.seen_filter = self._timed(
+                    "bloom", lambda: filt.admit(ranked, n_new, seen)
+                )
             # the next frontier stays lazy: both parts are filters or
             # projections over this round's checkpoints
             frontier = (admitted if no_politeness
@@ -1098,14 +1055,15 @@ class CrawlEngine:
         # manifest on first use (any rows a killed round appended past the
         # marker are gone with the rollback) — nothing to rebuild here, and
         # a non-durable config never writes one (ADVICE r2)
-        filt = self._fresh_filter()
+        filt = self.seen_filter
         if filt is not None:
-            # the filter's state died with the killed driver: rebuild it
-            # from the rolled-back seen table at the same shard layout,
-            # sized from the exact admission count (next_rank IS the
-            # number of URLs ever admitted), not the capacity hint
-            filt = filt.rebuild(seen, max(filt.expected, 2 * meta["next_rank"]))
-        self.seen_filter = filt
+            # a filter handed to a resuming engine cannot know which
+            # admissions the rollback undid: rebuild it from the rolled-back
+            # seen table at the same shard layout, sized from the exact
+            # admission count (next_rank IS the number of URLs ever admitted)
+            self.seen_filter = filt.rebuild(
+                seen, max(filt.expected, 2 * meta["next_rank"])
+            )
         state = _RoundState(
             frontier=frontier, seen=seen, next_rank=meta["next_rank"],
             round=meta["round"] + 1, frontier_count=frontier.count(),

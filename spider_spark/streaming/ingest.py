@@ -17,8 +17,8 @@ Structured Streaming pipeline:
   the production path), with an ``applyInPandasWithState``
   binary-sorted-digest fallback for images whose ``google.protobuf`` is
   broken (this sandbox). State is partitioned by
-  ``pmod(xxhash64(url), n_shards)`` — the streaming twin of the batch
-  engine's bloom-shard layout;
+  ``pmod(xxhash64(url), n_shards)`` — the streaming twin of the sharded
+  seen-filter layout (operators/shardstore.py);
 * **sink** — ``writeStream`` (append) with checkpointing; watermarking on
   ``warc_ts`` bounds state for the optional windowed per-host rate
   aggregation :func:`host_rate`.
@@ -276,8 +276,8 @@ def _digest_dedupe_fn(key, pdf_iter, state):
 
 def dedupe_links_stream(links: DataFrame, n_shards: int = 32,
                         impl: str = "auto") -> DataFrame:
-    """Streaming URL-seen dedupe, sharded like the batch engine's bloom
-    layout (D1/H3 analog). Emits each canonical link once (its first
+    """Streaming URL-seen dedupe, sharded like the batch seen filters
+    (D1/H3 analog). Emits each canonical link once (its first
     sighting across all micro-batches).
 
     Two engines behind one surface:

@@ -59,7 +59,7 @@ class TestBroadcastLifecycle:
         """Across a multi-round crawl the outstanding broadcast count stays
         O(n_shards): each round's handles are destroyed inside the round
         (a 1000-round crawl would otherwise leak ~filter-size × rounds) —
-        for the engine-owned bloom and a caller-owned cuckoo alike."""
+        for a caller-owned bloom and cuckoo alike."""
         from spider_spark.operators.shardstore import ShardedFilter
         from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
         from spider_spark.sources.pages import synthetic_pages
@@ -82,11 +82,10 @@ class TestBroadcastLifecycle:
         ShardedFilter.destroy_broadcasts = des
         try:
             pages = synthetic_pages(spark, 300).localCheckpoint(eager=True)
+            filter_cls = ShardedCuckoo if kind == "cuckoo" else ShardedBloom
             eng = CrawlEngine(
-                spark, pages,
-                CrawlConfig(depth=6, bloom_shards=2, verify_text=False),
-                seen_filter=(ShardedCuckoo(10_000, n_shards=2)
-                             if kind == "cuckoo" else None),
+                spark, pages, CrawlConfig(depth=6, verify_text=False),
+                seen_filter=filter_cls(10_000, n_shards=2),
             )
             res = eng.crawl("https://h0.example/d/0")
             rounds = len(res.metrics)
@@ -94,9 +93,7 @@ class TestBroadcastLifecycle:
         finally:
             ShardedFilter.register_broadcasts = orig_reg
             ShardedFilter.destroy_broadcasts = orig_des
-        assert isinstance(
-            eng.seen_filter, ShardedCuckoo if kind == "cuckoo" else ShardedBloom
-        )
+        assert isinstance(eng.seen_filter, filter_cls)
         assert peak["registered"] >= 2 * rounds  # one generation per round...
         assert peak["destroyed"] == peak["registered"]  # ...every one destroyed
         assert peak["live"] <= 2  # never more than one generation outstanding
@@ -144,22 +141,22 @@ class TestSpillMode:
                      max_driver_bytes=1024)
 
     def test_crawl_with_spilled_bloom_matches_memory(self, spark, tmp_path):
-        """End-to-end: the engine's fold (rank stats + bloom fill in one
-        pass) must produce identical crawls when the fill lands in shard
-        files instead of driver arrays."""
+        """End-to-end: a caller-owned bloom must produce identical crawls
+        when its per-round fill lands in shard files instead of driver
+        arrays."""
         from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
         from spider_spark.sources.pages import synthetic_pages
 
         pages = synthetic_pages(spark, 300).localCheckpoint(eager=True)
         seed = "https://h0.example/d/0"
+        cfg = CrawlConfig(depth=4, verify_text=False)
         a = CrawlEngine(
-            spark, pages, CrawlConfig(depth=4, verify_text=False, bloom_shards=2)
+            spark, pages, cfg, seen_filter=ShardedBloom(10_000, n_shards=2)
         ).crawl(seed)
-        b = CrawlEngine(
-            spark, pages,
-            CrawlConfig(depth=4, verify_text=False, bloom_shards=2,
-                        filter_spill_dir=str(tmp_path / "filters")),
-        ).crawl(seed)
+        spilled = ShardedBloom(10_000, n_shards=2,
+                               spill_dir=str(tmp_path / "filters"))
+        b = CrawlEngine(spark, pages, cfg, seen_filter=spilled).crawl(seed)
+        assert spilled.n_items == b.seen.count()
         cols = ("url", "depth", "admission_rank", "fetched")
         assert {tuple(r) for r in a.results.select(*cols).collect()} == {
             tuple(r) for r in b.results.select(*cols).collect()
@@ -173,8 +170,8 @@ class TestSpillMode:
                                                            tmp_path, kind):
         """A spilled filter sized for 8 keys grows mid-crawl (rebuilt from
         the seen table, still spilled) and leaves only the live filter's
-        current shard files behind — the engine-owned bloom and a
-        caller-owned cuckoo take the same path."""
+        current shard files behind — a caller-owned bloom and cuckoo take
+        the same path."""
         import os
 
         from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
@@ -182,14 +179,10 @@ class TestSpillMode:
 
         pages = synthetic_pages(spark, 300).localCheckpoint(eager=True)
         spill = tmp_path / "filters"
-        if kind == "bloom":
-            cfg = CrawlConfig(depth=3, verify_text=False, bloom_capacity=8,
-                              filter_spill_dir=str(spill))
-            initial = None
-        else:
-            cfg = CrawlConfig(depth=3, verify_text=False)
-            initial = ShardedCuckoo(8, spill_dir=str(spill))
-        eng = CrawlEngine(spark, pages, cfg, seen_filter=initial)
+        filter_cls = ShardedCuckoo if kind == "cuckoo" else ShardedBloom
+        initial = filter_cls(8, spill_dir=str(spill))
+        eng = CrawlEngine(spark, pages, CrawlConfig(depth=3, verify_text=False),
+                          seen_filter=initial)
         res = eng.crawl("https://h0.example/d/0")
         assert res.successful_crawls > 8
         live = eng.seen_filter

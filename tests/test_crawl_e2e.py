@@ -4,13 +4,14 @@ The pages table's link graph is defined arithmetically
 (spider_spark/sources/pages.py), so a DuckDB recursive CTE can compute the
 expected URL-seen set, min-depths, titles and fetch outcomes without
 parsing any HTML. The engine must reproduce that exactly through its real
-pipeline: fetch-join → Arrow parse UDF → explode → dedupe → bloom+anti-join.
+pipeline: fetch-join → Arrow parse UDF → explode → dedupe → anti-join.
 """
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from spider_spark.operators.bloom import ShardedBloom
 from spider_spark.plans.crawl import CrawlConfig, CrawlEngine
 from spider_spark.sources.pages import (
     oracle_results_sql,
@@ -70,7 +71,7 @@ class TestCrawlOracle:
     def test_budget_preserves_seen_set(self, spark, sf_dir, pages):
         # politeness changes scheduling, never membership (SURVEY I2/Q4)
         free = CrawlEngine(spark, pages, CrawlConfig(depth=3))
-        tight = CrawlEngine(spark, pages, CrawlConfig(depth=3, budget=2, salt=4))
+        tight = CrawlEngine(spark, pages, CrawlConfig(depth=3, budget=2))
         seed = seed_url_for(0, N_DOCS)
         res_free = free.crawl(seed)
         res_tight = tight.crawl(seed)
@@ -82,21 +83,32 @@ class TestCrawlOracle:
         assert engine_rows(res_tight) == oracle_rows(sf_dir, 0, 3)
 
     def test_no_bloom_same_result(self, spark, sf_dir, pages):
-        eng = CrawlEngine(spark, pages, CrawlConfig(depth=3, use_bloom=False))
-        res = eng.crawl(seed_url_for(0, N_DOCS))
-        assert engine_rows(res) == oracle_rows(sf_dir, 0, 3)
+        """The default seen gate is the plain anti-join (no filter is
+        built); a caller-owned bloom prefilter in front of it changes no
+        row."""
+        seed = seed_url_for(0, N_DOCS)
+        plain = CrawlEngine(spark, pages, CrawlConfig(depth=3))
+        expected = oracle_rows(sf_dir, 0, 3)
+        assert engine_rows(plain.crawl(seed)) == expected
+        assert plain.seen_filter is None
+        bloomed = CrawlEngine(spark, pages, CrawlConfig(depth=3),
+                              seen_filter=ShardedBloom(10_000))
+        assert engine_rows(bloomed.crawl(seed)) == expected
 
     def test_sharded_bloom_with_growth_same_result(self, spark, sf_dir, pages):
-        """The 10^10-path config — 4 hash-partitioned bloom shards and a
-        deliberately tiny capacity hint (forces the saturation→rebuild
-        path mid-crawl) — must be invisible to results (H3: exact by
-        construction)."""
-        eng = CrawlEngine(
-            spark, pages,
-            CrawlConfig(depth=4, bloom_shards=4, bloom_capacity=8),
-        )
+        """The 10^10-path filter — a caller-owned bloom with 4
+        hash-partitioned shards sized for 8 keys, so it must grow (rebuilt
+        from the seen table) mid-crawl — must be invisible to results (H3:
+        exact by construction)."""
+        initial = ShardedBloom(8, n_shards=4)
+        eng = CrawlEngine(spark, pages, CrawlConfig(depth=4),
+                          seen_filter=initial)
         res = eng.crawl(seed_url_for(0, N_DOCS))
         assert engine_rows(res) == oracle_rows(sf_dir, 0, 4)
+        grown = eng.seen_filter
+        assert grown is not initial and grown.expected > 8
+        assert grown.n_shards == 4
+        assert grown.n_items == res.seen.count()
 
     def test_durable_mode_matches_oracle(self, spark, sf_dir, pages,
                                          tmp_path_factory):
@@ -197,8 +209,8 @@ class TestNoCache:
             spark, tiny, CrawlConfig(depth=4, verify_text=False, use_cache=False)
         )
         uncached = uncached_eng.crawl(seed)
-        # with the gate off no seen filter is built, filled or grown
-        assert cached_eng.seen_filter is not None
+        # the engine builds no seen filter of its own, gate on or off
+        assert cached_eng.seen_filter is None
         assert uncached_eng.seen_filter is None
         cached_urls = {
             r["url"] for r in cached.results.filter(F.col("fetched")).collect()

@@ -521,34 +521,51 @@ class TestScheduleExactness:
 
 
 class TestBudgetedRoundJobs:
-    """Jobs per budgeted round, pinned together with the round metrics
-    they must not change: the scheduler tags each frontier row in one
-    materialization and the next frontier stays lazy. This crawl ran 81
-    jobs over 4 rounds on a 4-core host (128 when the eligible set and
-    the next frontier were checkpointed separately)."""
+    """Jobs per round, pinned together with the round metrics they must
+    not change: the scheduler tags each frontier row in one
+    materialization, the next frontier stays lazy, and the seen gate is
+    one anti-join folded into the ranking job. On a 4-core host the
+    budgeted crawl ran 77 jobs over 4 rounds (81 with a bloom prefilter
+    ahead of the anti-join, 128 when the eligible set and the next
+    frontier were checkpointed separately) and its no-budget twin 22 jobs
+    over 2 rounds (25 with the prefilter)."""
 
-    def test_jobs_per_round_and_metrics(self, spark):
+    SEEDS = [f"https://h0.example/d/{i}" for i in range(0, 16, 2)]
+
+    def _crawl(self, spark, config, **kwargs):
         pages = synthetic_pages(spark, 3000).localCheckpoint(eager=True)
-        robots = spark.createDataFrame(
-            [("h0.example", ["/d/2"], 0.0), ("h6.example", ["/d/"], 0.0),
-             ("h10.example", [], 20.0)],
-            "host string, disallow_prefixes array<string>, crawl_delay double",
-        )
-        eng = CrawlEngine(
-            spark, pages, CrawlConfig(depth=1, budget=5, verify_text=False),
-            robots=robots,
-        )
-        sc, group = spark.sparkContext, "budgeted-round-jobs"
+        eng = CrawlEngine(spark, pages, config, **kwargs)
+        # a group per crawl: the status tracker keeps every group's jobs
+        sc, group = spark.sparkContext, f"round-jobs-{id(eng)}"
         sc.setJobGroup(group, group)
         try:
-            res = eng.crawl([f"https://h0.example/d/{i}" for i in range(0, 16, 2)])
+            res = eng.crawl(self.SEEDS)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         got = [(m.round, m.admitted, m.fetched, m.new_links, m.carryover,
                 m.blocked) for m in res.metrics]
+        return n_jobs, got
+
+    def test_jobs_per_round_and_metrics(self, spark):
+        robots = spark.createDataFrame(
+            [("h0.example", ["/d/2"], 0.0), ("h6.example", ["/d/"], 0.0),
+             ("h10.example", [], 20.0)],
+            "host string, disallow_prefixes array<string>, crawl_delay double",
+        )
+        n_jobs, got = self._crawl(
+            spark, CrawlConfig(depth=1, budget=5, verify_text=False),
+            robots=robots,
+        )
         # blocked seed + links, budget carryover, dead links fetched as
         # misses (round 3), a crawl-delay cap
         assert got == [(0, 21, 5, 13, 2, 1), (1, 6, 2, 6, 11, 2),
                        (2, 0, 10, 0, 2, 0), (3, 0, 0, 0, 0, 0)]
-        assert n_jobs / len(got) <= 24, f"{n_jobs} jobs over {len(got)} rounds"
+        assert n_jobs / len(got) <= 20, f"{n_jobs} jobs over {len(got)} rounds"
+
+    def test_no_budget_jobs_per_round_and_metrics(self, spark):
+        """The same crawl with no budget and no robots rules takes the
+        no-politeness fast path: the scheduler never runs."""
+        n_jobs, got = self._crawl(spark, CrawlConfig(depth=1, verify_text=False))
+        assert got == [(0, 29, 8, 21, 0, 0), (1, 0, 13, 0, 0, 0)]
+        assert n_jobs / len(got) <= 11, f"{n_jobs} jobs over {len(got)} rounds"

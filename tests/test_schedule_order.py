@@ -85,8 +85,7 @@ def test_budgeted_order_matches_reference(spark, budget, waves):
     pages = synthetic_pages(spark, N).localCheckpoint(eager=True)
     eng = CrawlEngine(
         spark, pages,
-        CrawlConfig(depth=4, budget=budget, waves=waves, verify_text=False,
-                    salt=4),
+        CrawlConfig(depth=4, budget=budget, waves=waves, verify_text=False),
     )
     res = eng.crawl("https://h0.example/d/0")
     got_ranks = {

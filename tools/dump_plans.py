@@ -1,10 +1,14 @@
 """Regenerate PLANS.md: formatted physical plans for the scale-critical
-operators. The properties shown are pinned as tests in tests/test_plans.py."""
+operators. The properties shown are pinned as tests in tests/test_plans.py.
+
+Each section this script captures replaces the PLANS.md section of the same
+title (or is appended); every other section of the file is left as is."""
 
 from __future__ import annotations
 
 import io
 import pathlib
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -13,6 +17,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import spider_spark.plans.crawl as crawl_mod  # noqa: E402
 from spider_spark.operators.dedupe import minhash_signatures  # noqa: E402
 from spider_spark.operators.similarity import cosine_topk  # noqa: E402
 from spider_spark.session import get_spark  # noqa: E402
@@ -68,6 +73,35 @@ def main() -> None:
         cosine_topk(emb, emb.filter(F.col("vec_id") < 2), k=3),
     )
 
+    # a default crawl round's seen gate: capture the ranking input of the
+    # second round (its seen side is a union of checkpointed deltas)
+    rank_inputs = []
+    rank = crawl_mod.with_global_rank
+
+    def spy(df, *args, **kwargs):
+        rank_inputs.append(df)
+        return rank(df, *args, **kwargs)
+
+    crawl_mod.with_global_rank = spy
+    try:
+        crawl_mod.CrawlEngine(
+            spark, synthetic_pages(spark, 300).localCheckpoint(eager=True),
+            crawl_mod.CrawlConfig(depth=2, verify_text=False),
+        ).crawl("https://h0.example/d/0")
+    finally:
+        crawl_mod.with_global_rank = rank
+    cap(
+        "Crawl seen gate (one exact anti-join, folded into the ranking job)",
+        "The ranking input of a default round (the second): the min-depth "
+        "dedupe's Exchange hashpartitioning(canon_url) already places the "
+        "candidates, so the LeftAnti SortMergeJoin adds no Exchange on the "
+        "candidate side and one on the seen side (a union of checkpointed "
+        "deltas). No Python evaluation node: the parse kernel ran in the "
+        "round's fetch checkpoint (the Scan ExistingRDD). A bloom prefilter "
+        "ahead of the join could save no shuffle here.",
+        rank_inputs[1],
+    )
+
     # durable-mode seen anti-join: bucketed catalog table on the seen side
     old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -87,7 +121,8 @@ def main() -> None:
         cap(
             "Durable seen-set anti-join (bucketed seen scan, no Exchange over it)",
             "Durable mode reads seen membership through the TableIO bucketed "
-            "key mirror (tableio.read_bucketed_keys). The left_anti SortMergeJoin "
+            "key mirror (tableio.read_bucketed_keys, synced O(delta) from the "
+            "manifest). The left_anti SortMergeJoin "
             "exchanges ONLY the candidate delta into the 32-bucket layout; "
             "the accumulated seen scan (SelectedBucketsCount: 32 of 32) feeds "
             "the join in place — at 10^10 seen URLs that is the difference "
@@ -102,20 +137,23 @@ def main() -> None:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
         spark.sql("DROP TABLE IF EXISTS plans_seen_bucketed")
 
-    with open(REPO / "PLANS.md", "w") as f:
-        f.write(
-            "# PLANS — formatted physical plans for the scale-critical operators\n\n"
-        )
-        f.write(
-            "Generated by `.explain('formatted')` (regenerate: "
-            "`python tools/dump_plans.py`).\n"
-        )
-        f.write(
-            "The properties asserted here are pinned as regression tests in "
-            "`tests/test_plans.py`.\n\n"
-        )
-        for title, note, plan in sections:
-            f.write(f"## {title}\n\n{note}\n\n```\n{plan}\n```\n\n")
+    path = REPO / "PLANS.md"
+    text = path.read_text() if path.exists() else (
+        "# PLANS — formatted physical plans for the scale-critical operators\n\n"
+        "Generated by `.explain('formatted')` (regenerate: "
+        "`python tools/dump_plans.py`).\n"
+        "The properties asserted here are pinned as regression tests in "
+        "`tests/test_plans.py`.\n\n"
+    )
+    for title, note, plan in sections:
+        block = f"## {title}\n\n{note}\n\n```\n{plan}\n```\n\n"
+        section = re.compile(rf"^## {re.escape(title)}\n.*?(?=^## |\Z)",
+                             re.S | re.M)
+        if section.search(text):
+            text = section.sub(lambda _: block, text, count=1)
+        else:
+            text = text.rstrip("\n") + "\n\n" + block
+    path.write_text(text.rstrip("\n") + "\n")
 
 
 if __name__ == "__main__":
